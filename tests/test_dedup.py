@@ -128,6 +128,37 @@ def test_simhash_band_bucket_guard_collapses_boilerplate(spark):
     assert guarded == {(30, 31)}  # guard kills the flood, keeps the real dup
 
 
+def test_minhash_band_bucket_guard_boundary(spark):
+    """The MinHash ``max_bucket`` cap is inclusive: identical docs share
+    every band bucket, so at the cap all C(5, 2) pairs survive and one doc
+    past it every bucket is dropped and no pair is left.  Both sides of the
+    boundary match the DuckDB oracle's capped bucket CTE."""
+    import duckdb
+
+    from kgx import oracles
+
+    con = duckdb.connect()
+    sql = (
+        "WITH "
+        + oracles._minhash_pairs_ctes(
+            "documents", "doc_id", oracles._duck_shingles(3), max_bucket=5
+        )
+        + " SELECT doc_a, doc_b, jaccard FROM mh_pairs WHERE jaccard >= 0.5"
+    )
+    for copies, want in ((5, 10), (6, 0)):
+        pdf = pd.DataFrame({"doc_id": range(copies), "text": [BASE] * copies})
+        got = {
+            (r.doc_a, r.doc_b, r.jaccard)
+            for r in dedup.minhash_lsh_pairs(
+                spark.createDataFrame(pdf), max_bucket=5
+            ).collect()
+        }
+        assert len(got) == want, (copies, got)
+        assert all(j == 1.0 for _, _, j in got)
+        con.register("documents", pdf)
+        assert got == set(con.execute(sql).fetchall()), copies
+
+
 def test_short_docs_produce_no_shingles(spark):
     df = _docs(spark, ["one two", "x", ""])
     assert dedup.shingle_table(df, n=3).count() == 0
