@@ -47,14 +47,22 @@ def main(argv=None) -> int:
     p.add_argument("--biased", action="store_true",
                    help="node2vec second-order biased walks instead of "
                         "the uniform DeepWalk sampler")
-    p.add_argument("--w-return", type=int, default=1,
-                   help="node2vec return weight (~1/p), --biased only")
-    p.add_argument("--w-near", type=int, default=4,
-                   help="node2vec distance-1 weight, --biased only")
-    p.add_argument("--w-far", type=int, default=2,
-                   help="node2vec distance-2 weight (~1/q), --biased only")
+    weights = {"w_return": 1, "w_near": 4, "w_far": 2}
+    p.add_argument("--w-return", type=int, default=None,
+                   help="node2vec return weight (~1/p, default 1), "
+                        "--biased only")
+    p.add_argument("--w-near", type=int, default=None,
+                   help="node2vec distance-1 weight (default 4), --biased only")
+    p.add_argument("--w-far", type=int, default=None,
+                   help="node2vec distance-2 weight (~1/q, default 2), "
+                        "--biased only")
     p.add_argument("--master", default=None, help="override (sandbox runs)")
     args = p.parse_args(argv)
+    if not args.biased and any(getattr(args, w) is not None for w in weights):
+        p.error("--w-return/--w-near/--w-far only apply with --biased")
+    for w, default in weights.items():
+        if getattr(args, w) is None:
+            setattr(args, w, default)
 
     from pyspark import StorageLevel
     from pyspark.sql import functions as F

@@ -1,4 +1,4 @@
-"""Optimizer barriers for computed-column materialization.
+"""Optimizer barriers: computed-column materialization and table pins.
 
 Catalyst's CollapseProject inlines a computed column into every textual
 reference downstream.  For scalar consumers SPARK-36718 guards against
@@ -39,6 +39,15 @@ key depends on, and the numbers fall to 1.9 s, 10.3 s and 7.0 s, with
 the same candidates, pairs, shuffle bytes and job count.  Rule: before a
 table is checkpointed and later joined on a column, filter on a computed
 expression of that column only behind a barrier.
+
+:func:`pin` is the one pin policy of the operators: every bounded
+intermediate that feeds several plan branches is pinned exactly once, and
+iterative rounds (k-core, connected components, PageRank's
+``checkpoint_every``) cut their lineage through it.  The policy is an
+eager, executor-local checkpoint: no reliable storage, one Spark job at
+the call site.  Its blocks live with the executors, so a lost executor
+loses them; on a cluster with frequent executor loss (spot instances)
+change this one function to a reliable ``checkpoint``.
 """
 
 from __future__ import annotations
@@ -54,3 +63,9 @@ def project_barrier(df: DataFrame) -> DataFrame:
     return df.select(
         F.explode(F.array(F.struct(*[F.col(c) for c in df.columns]))).alias("_row")
     ).select("_row.*")
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Evaluate ``df`` once, now, and return a table that reads its rows
+    back instead of re-running its plan (an eager ``localCheckpoint``)."""
+    return df.localCheckpoint(eager=True)

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgx.functions.plan import pin
+
 
 def edge_list(triples: DataFrame) -> DataFrame:
     """Distinct global (subj, obj) label edges from doc-level triples.
@@ -74,9 +76,9 @@ def pagerank(
     table plus one aggregate — the rank table carries only (label, rank)
     bigints, so at 10^12-doc scale the per-iteration shuffle is the edge
     list key-joined against a table orders of magnitude smaller than the
-    corpus.  ``checkpoint_every`` truncates lineage every k rounds via
-    ``localCheckpoint`` (eager) — set it for deep iteration counts in jobs;
-    leave None in lazy gate queries (5 rounds of joins plan fine).
+    corpus.  ``checkpoint_every`` truncates lineage every k rounds with
+    :func:`kgx.functions.plan.pin` — set it for deep iteration counts in
+    jobs; leave None in lazy gate queries (5 rounds of joins plan fine).
     """
     e = edge_list(triples)
     nodes = (
@@ -107,13 +109,11 @@ def pagerank(
             .alias("rank"),
         )
         if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = pin(ranks)
     return ranks
 
 
-def entity_cooccurrence(
-    nodes: DataFrame, min_co: int = 2, materialize: bool = True
-) -> DataFrame:
+def entity_cooccurrence(nodes: DataFrame, min_co: int = 2) -> DataFrame:
     """Document-level entity co-occurrence with an exact-integer lift
     score — the edge-weighting signal entity-linking and KG-completion
     pipelines hang off the raw co-mention counts (PMI's monotone cousin,
@@ -139,17 +139,14 @@ def entity_cooccurrence(
     explicit broadcast.  Output: (label_a, label_b, co_docs, docs_a,
     docs_b, lift_bp).
 
-    ``materialize`` (default on): the distinct (doc_id, label) table
-    feeds FOUR branches (per-doc arrays, both margin joins, the corpus
-    count), so a lazy plan re-runs its distinct shuffle and the upstream
-    extraction per branch; one eager ``localCheckpoint`` pins it
-    (alternating A/B at sf0.1: 2.07-2.62 s lazy vs 1.74-2.15 s pinned,
-    uniformly ordered; contamination_screen's analogous 2-branch shingle
-    table was A/B'd the same way and measured WORSE checkpointed — cheap
-    recompute beats the barrier there — so it stays lazy)."""
-    dl = nodes.select("doc_id", "label").distinct()
-    if materialize:
-        dl = dl.localCheckpoint(eager=True)
+    The distinct (doc_id, label) table is pinned: it feeds FOUR branches
+    (per-doc arrays, both margin joins, the corpus count), so a lazy plan
+    would re-run its distinct shuffle and the upstream extraction per
+    branch (alternating A/B at sf0.1: 2.07-2.62 s lazy vs 1.74-2.15 s
+    pinned, uniformly ordered; contamination_screen's analogous 2-branch
+    shingle table was A/B'd the same way and measured WORSE checkpointed
+    — cheap recompute beats the barrier there — so it stays lazy)."""
+    dl = pin(nodes.select("doc_id", "label").distinct())
     per_doc = dl.groupBy("doc_id").agg(
         F.sort_array(F.collect_list("label")).alias("ls")
     )
@@ -196,9 +193,7 @@ def entity_cooccurrence(
     )
 
 
-def label_propagation(
-    triples: DataFrame, iters: int = 3, materialize: bool = True
-) -> DataFrame:
+def label_propagation(triples: DataFrame, iters: int = 3) -> DataFrame:
     """Synchronous frequency-vote label propagation (community detection)
     over the UNDIRECTED distinct edge set: ``community_0(u) = u``;
     ``community_{t+1}(u)`` = the most frequent community among u's
@@ -220,10 +215,10 @@ def label_propagation(
     scale each round shuffles the edge list against a table orders of
     magnitude smaller than the corpus.  Output: (label, community).
 
-    ``materialize`` (default on): the undirected edge set is
-    loop-invariant but referenced once per round plus the label init, so
-    a lazy plan re-runs its union+distinct shuffle (and everything
-    upstream) iters+1 times; one eager ``localCheckpoint`` pins it.
+    The undirected edge set is pinned: it is loop-invariant but
+    referenced once per round plus the label init, so a lazy plan would
+    re-run its union+distinct shuffle (and everything upstream) iters+1
+    times.
     Alternating A/B at sf0.1 (checkpointed triples input, 3 iters):
     1.81-2.41 s lazy vs 1.60-2.06 s pinned, uniformly ordered — and the
     win scales with iters and upstream plan cost.  (The per-round LABELS
@@ -232,11 +227,11 @@ def label_propagation(
     from pyspark.sql.window import Window
 
     e = edge_list(triples)
-    und = e.union(
-        e.select(F.col("obj").alias("subj"), F.col("subj").alias("obj"))
-    ).distinct()
-    if materialize:
-        und = und.localCheckpoint(eager=True)
+    und = pin(
+        e.union(
+            e.select(F.col("obj").alias("subj"), F.col("subj").alias("obj"))
+        ).distinct()
+    )
     labels = (
         und.select(F.col("subj").alias("node")).distinct()
         .select("node", F.col("node").alias("community"))
@@ -325,16 +320,15 @@ def kcore(triples: DataFrame, k: int = 2, iters: int = 4) -> DataFrame:
     peel round references the live edge list TWICE — the degree aggregate
     and the semi-join probe — so a lazy chained plan re-evaluates the
     upstream extraction 2^iters times.  The edge list is therefore
-    eagerly ``localCheckpoint``ed every round: it only SHRINKS, the
-    per-round materialization is two bigint-pair columns, and the
+    pinned (:func:`kgx.functions.plan.pin`) every round: it only
+    SHRINKS, the per-round materialization is two bigint-pair columns, and the
     checkpoint is exactly the lineage cut a fixpoint-seeking job needs
     anyway (measured: 386 s lazy → seconds checkpointed at sf0.01).
     """
     e = edge_list(triples)
-    und = (
+    und = pin(
         e.union(e.select(F.col("obj").alias("subj"), F.col("subj").alias("obj")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     for _ in range(iters):
         keep = (
@@ -343,10 +337,9 @@ def kcore(triples: DataFrame, k: int = 2, iters: int = 4) -> DataFrame:
             .where(F.col("deg") >= k)
             .select("subj")
         )
-        und = (
+        und = pin(
             und.join(keep, "subj", "left_semi")
             .join(keep.withColumnRenamed("subj", "obj"), "obj", "left_semi")
-            .localCheckpoint(eager=True)
         )
     return (
         und.groupBy(F.col("subj").alias("label"))
@@ -355,11 +348,7 @@ def kcore(triples: DataFrame, k: int = 2, iters: int = 4) -> DataFrame:
 
 
 def negative_samples(
-    triples: DataFrame,
-    k: int = 2,
-    buckets: int = 64,
-    materialize: bool = True,
-    assume_distinct: bool = False,
+    triples: DataFrame, k: int = 2, buckets: int = 64
 ) -> DataFrame:
     """Deterministic hash-bucketed negative sampling for KG-embedding
     training (TransE-family): each distinct (subj, pred, obj) triple gets
@@ -379,25 +368,25 @@ def negative_samples(
     bucket sizes are a tiny broadcast, and the sample join is a
     hash-partitioned equi-join on (bucket, idx) — uniform by
     construction, no skew, no candidate enumeration wider than the k-way
-    explode.
+    explode.  The distinct triple set is pinned: it feeds THREE branches
+    (both halves of the node union and the k-way candidate explode).
     """
+    return _negative_samples(
+        pin(triples.select("subj", "pred", "obj").distinct()), k, buckets
+    )
+
+
+def _negative_samples(t: DataFrame, k: int, buckets: int) -> DataFrame:
+    """Body of :func:`negative_samples` over ``t``, an already distinct,
+    already pinned (subj, pred, obj) table — :func:`training_pairs` passes
+    its own pinned triple set, so neither the dedup exchange nor the pin
+    runs twice."""
     from pyspark.sql.window import Window
 
     from kgx.functions.hashing import spark_md5_60
 
     if k < 1 or buckets < 1:
         raise ValueError(f"bad sampling shape k={k} buckets={buckets}")
-    # the distinct triple set feeds THREE branches (both halves of the node
-    # union + the k-way candidate explode); ``materialize`` (default on)
-    # pins it with one eager localCheckpoint — callers whose input is
-    # already materialized (training_pairs) pass False to skip the barrier,
-    # and ``assume_distinct`` skips the dedup exchange entirely when the
-    # caller's input is already a distinct (subj, pred, obj) set
-    t = triples.select("subj", "pred", "obj")
-    if not assume_distinct:
-        t = t.distinct()
-    if materialize:
-        t = t.localCheckpoint(eager=True)
     nodes = (
         t.select(F.col("subj").alias("label"))
         .union(t.select(F.col("obj").alias("label")))
@@ -448,15 +437,14 @@ def kcore_fixpoint(
     """k-core peel run to the FIXPOINT (for jobs; the gate query
     :func:`kcore` uses a fixed round count so its oracle can unroll).
     Returns (core degrees, rounds used).  Each round's edge list is
-    already an eager ``localCheckpoint`` (see :func:`kcore`), so the
+    already pinned (see :func:`kcore`), so the
     driver-side convergence test reads a materialized count — no extra
     evaluation; lineage stays one round deep regardless of depth.
     """
     e = edge_list(triples)
-    und = (
+    und = pin(
         e.union(e.select(F.col("obj").alias("subj"), F.col("subj").alias("obj")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n = und.count()
     rounds = 0
@@ -467,10 +455,9 @@ def kcore_fixpoint(
             .where(F.col("deg") >= k)
             .select("subj")
         )
-        und = (
+        und = pin(
             und.join(keep, "subj", "left_semi")
             .join(keep.withColumnRenamed("subj", "obj"), "obj", "left_semi")
-            .localCheckpoint(eager=True)
         )
         rounds += 1
         m = und.count()
@@ -487,7 +474,6 @@ def common_neighbor_candidates(
     triples: DataFrame,
     max_degree: int = 64,
     min_common: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """Link-prediction candidate generation over the KG: node pairs that
     share >= ``min_common`` neighbors, with their exact common-neighbor
@@ -507,20 +493,20 @@ def common_neighbor_candidates(
     Jaccard denominator.  One count aggregate on (a, b), two AQE-decided
     margin joins, one left join onto the canonical edge set.
 
-    ``materialize`` (default on): the undirected edge set feeds FOUR plan
-    branches (degrees, neighbor lists, the canonical-edge left join, and
-    its own union+distinct shuffle per consumer), so a lazy plan re-runs
-    the upstream extraction and the distinct shuffle per branch.  One
-    eager ``localCheckpoint`` pins it — same stance as kcore's per-round
-    state; alternating A/B at sf0.1: 1.87-2.01 s lazy vs 1.17-1.57 s
-    checkpointed even with an already-checkpointed triples input (the gap
-    widens when triples is a live extraction plan)."""
+    The undirected edge set is pinned: it feeds FOUR plan branches
+    (degrees, neighbor lists, the canonical-edge left join, and its own
+    union+distinct shuffle per consumer), so a lazy plan would re-run the
+    upstream extraction and the distinct shuffle per branch — same
+    stance as kcore's per-round state; alternating A/B at sf0.1:
+    1.87-2.01 s lazy vs 1.17-1.57 s checkpointed even with an
+    already-checkpointed triples input (the gap widens when triples is a
+    live extraction plan)."""
     e = edge_list(triples)
-    und = e.union(
-        e.select(F.col("obj").alias("subj"), F.col("subj").alias("obj"))
-    ).distinct()
-    if materialize:
-        und = und.localCheckpoint(eager=True)
+    und = pin(
+        e.union(
+            e.select(F.col("obj").alias("subj"), F.col("subj").alias("obj"))
+        ).distinct()
+    )
     deg = und.groupBy("subj").agg(F.count("*").cast("long").alias("deg"))
     nbrs = und.groupBy("subj").agg(
         F.sort_array(F.collect_list("obj")).alias("ns")
@@ -574,7 +560,7 @@ def common_neighbor_candidates(
 
 
 def training_pairs(
-    triples: DataFrame, k: int = 2, buckets: int = 64, materialize: bool = True
+    triples: DataFrame, k: int = 2, buckets: int = 64
 ) -> DataFrame:
     """The KG-embedding training set, composed end-to-end: every distinct
     (subj, pred, obj) triple as a positive example plus its ``k``
@@ -594,22 +580,17 @@ def training_pairs(
     hash-partitioned left-anti join on the (subj, pred, obj) key for the
     filtered setting; nothing wider than the triple key shuffles.
 
-    ``materialize`` (default on): the distinct-triple set feeds THREE plan
-    branches (the positive union arm, the anti-join build side, and
-    negative_samples' own input), and an unpersisted input would
-    re-evaluate the upstream plan per branch (exchange reuse does not
-    apply — each consumer exchanges differently).  One eager
-    ``localCheckpoint`` of the already-bounded distinct projection pins it
-    to a single evaluation — the same stance as kcore's per-round state
-    and minhash_lsh_pairs' shingle table."""
-    tri = triples.select("subj", "pred", "obj").distinct()
-    if materialize:
-        tri = tri.localCheckpoint(eager=True)
+    The distinct-triple set is pinned once and shared with the sampler
+    body: it feeds THREE plan branches (the positive union arm, the
+    anti-join build side, and the negative sampler's own input), and an
+    unpinned input would re-evaluate the upstream plan per branch
+    (exchange reuse does not apply — each consumer exchanges
+    differently) — the same stance as kcore's per-round state and
+    minhash_lsh_pairs' shingle table."""
+    tri = pin(triples.select("subj", "pred", "obj").distinct())
     pos = tri.withColumn("is_positive", F.lit(1).cast("long"))
     neg = (
-        negative_samples(
-            tri, k=k, buckets=buckets, materialize=False, assume_distinct=True
-        )
+        _negative_samples(tri, k, buckets)
         .select(
             "subj",
             "pred",
@@ -622,7 +603,7 @@ def training_pairs(
 
 
 def _walk_scaffold(
-    triples: DataFrame, walks_per_node: int, materialize: bool, with_prev: bool
+    triples: DataFrame, walks_per_node: int, with_prev: bool
 ) -> tuple[DataFrame, DataFrame]:
     """Shared scaffolding of the walk samplers (random_walks /
     node2vec_walks): pinned distinct edge list → sorted adjacency table
@@ -630,10 +611,8 @@ def _walk_scaffold(
     predecessor column second-order samplers track.  One definition so a
     future change to the pin stance or adjacency semantics cannot drift
     between samplers."""
-    e = edge_list(triples)
-    if materialize:
-        # feeds the adjacency aggregate + both halves of the node union
-        e = e.localCheckpoint(eager=True)
+    # feeds the adjacency aggregate + both halves of the node union
+    e = pin(edge_list(triples))
     adj = e.groupBy("subj").agg(F.sort_array(F.collect_set("obj")).alias("nbrs"))
     nodes = (
         e.select(F.col("subj").alias("label"))
@@ -670,7 +649,6 @@ def random_walks(
     length: int = 4,
     walks_per_node: int = 2,
     seed: int = 0,
-    materialize: bool = True,
 ) -> DataFrame:
     """DeepWalk-style deterministic random-walk corpus over the directed
     KG edge list — the graph→sequence export a skip-gram / node2vec
@@ -689,12 +667,11 @@ def random_walks(
     Scale shape: each of the ``length − 1`` steps is ONE label
     equi-join of the walk frontier against the adjacency table
     (AQE-decided build side), and frontier rows carry only (labels,
-    ≤ length-string array), never text.  ``materialize`` (default on)
-    pins the distinct EDGE list with one eager ``localCheckpoint`` — it
-    feeds the adjacency aggregate plus both halves of the node union,
-    and on extraction-fed input a lazy plan replays the whole
-    extraction subtree per branch (the checkpointed-edge-table stance
-    of the other graph ops).  The adjacency table itself deliberately
+    ≤ length-string array), never text.  The distinct EDGE list is
+    pinned — it feeds the adjacency aggregate plus both halves of the
+    node union, and on extraction-fed input a lazy plan replays the
+    whole extraction subtree per branch (the checkpointed-edge-table
+    stance of the other graph ops).  The adjacency table itself deliberately
     stays LAZY: the split A/B (200k-edge synthetic, alternating
     3-round, warmed) read edge-pin-only 0.84/0.80/0.75 s vs +adj-pin
     1.56/1.06/1.08 s — every step's join probes one identical exchange
@@ -712,7 +689,7 @@ def random_walks(
         raise ValueError(
             f"bad walk shape length={length} walks_per_node={walks_per_node}"
         )
-    adj, cur = _walk_scaffold(triples, walks_per_node, materialize, with_prev=False)
+    adj, cur = _walk_scaffold(triples, walks_per_node, with_prev=False)
     for i in range(1, length):
         h = spark_md5_60(
             f"concat_ws('|', cur, cast(walk_id as string), '{i}', '{seed}')"
@@ -861,9 +838,7 @@ def transe_margin(
     )
 
 
-def two_hop_stats(
-    triples: DataFrame, max_degree: int = 64, materialize: bool = True
-) -> DataFrame:
+def two_hop_stats(triples: DataFrame, max_degree: int = 64) -> DataFrame:
     """Two-hop neighborhood size per node — the graph-expansion signal
     (how fast does each entity's neighborhood grow?) that prices
     traversal queries and flags hub-adjacent entities before a
@@ -880,17 +855,16 @@ def two_hop_stats(
     distinct shuffle on the (label, hop2) pair key, one left-anti join
     dropping 1-hop edges, one count aggregate.
 
-    ``materialize`` (default on): the undirected edge set feeds FOUR
-    plan branches (degrees, neighbor arrays, the anti-join build side,
-    and its own union+distinct per consumer) — one eager
-    ``localCheckpoint`` pins it, same as common_neighbor_candidates.
+    The undirected edge set is pinned: it feeds FOUR plan branches
+    (degrees, neighbor arrays, the anti-join build side, and its own
+    union+distinct per consumer), same as common_neighbor_candidates.
     """
     e = edge_list(triples)
-    und = e.union(
-        e.select(F.col("obj").alias("subj"), F.col("subj").alias("obj"))
-    ).distinct()
-    if materialize:
-        und = und.localCheckpoint(eager=True)
+    und = pin(
+        e.union(
+            e.select(F.col("obj").alias("subj"), F.col("subj").alias("obj"))
+        ).distinct()
+    )
     deg = und.groupBy("subj").agg(F.count("*").cast("long").alias("degree"))
     nbrs = und.groupBy("subj").agg(
         F.sort_array(F.collect_list("obj")).alias("ns")
@@ -940,7 +914,6 @@ def node2vec_walks(
     w_return: int = 1,
     w_near: int = 4,
     w_far: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """node2vec second-order biased walk corpus (Grover & Leskovec 2016)
     over the directed KG edge list — :func:`random_walks`' DeepWalk
@@ -972,8 +945,8 @@ def node2vec_walks(
     both consumers (SPARK-36718, the transe_margin stance).  Step 1 has
     no predecessor, so it skips the prev join entirely and picks
     uniformly (index ``(h % (deg·w_far)) div w_far`` — identical to the
-    fold with constant weights).  ``materialize`` pins the distinct
-    edge list once (the random_walks stance, via the shared
+    fold with constant weights).  The distinct edge list is pinned
+    once (the random_walks stance, via the shared
     :func:`_walk_scaffold`); the adjacency table stays lazy for the
     same measured reason.
 
@@ -990,7 +963,7 @@ def node2vec_walks(
             f"node2vec weights must be >= 1 (zero-total draws would stall "
             f"walkers): w_return={w_return} w_near={w_near} w_far={w_far}"
         )
-    adj, cur = _walk_scaffold(triples, walks_per_node, materialize, with_prev=True)
+    adj, cur = _walk_scaffold(triples, walks_per_node, with_prev=True)
     padj = adj.select(
         F.col("subj").alias("psubj"), F.col("nbrs").alias("pnbrs")
     )

@@ -112,9 +112,16 @@ def assign_cells(
     the corpus grows."""
     if target_cell_size is not None:
         n_centroids = auto_centroids(embeddings, target_cell_size)
+    return _assign_cells(
+        quantized(embeddings).where(F.col("nrm") > 0), n_centroids, n_assign
+    )
+
+
+def _assign_cells(base: DataFrame, n_centroids: int, n_assign: int) -> DataFrame:
+    """Body of :func:`assign_cells` over ``base``, an already
+    :func:`quantized` table with zero-norm vectors removed."""
     from pyspark.sql.window import Window
 
-    base = quantized(embeddings).where(F.col("nrm") > 0)
     cents = base.where(F.col("vec_id") < n_centroids).select(
         F.col("vec_id").alias("cell"),
         F.col("q").alias("cq"),

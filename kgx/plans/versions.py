@@ -86,10 +86,15 @@ def scd2_intervals(runs: DataFrame, n_runs: int) -> DataFrame:
     global sort) + one map-side-combined min/max aggregate on
     (triple, island).  Only key columns and two ints ever shuffle.
     ``is_current`` = the segment reaches ``n_runs`` (the newest run) —
-    passed explicitly so the plan needs no second global max scan.
+    passed explicitly so the plan needs no second global max scan.  A
+    stale ``n_runs`` below some ``run_seq`` fails the query loudly: the
+    final projection raises per row on ``last_seq > n_runs`` (no extra
+    scan), instead of silently marking nothing at the true newest run
+    current.
 
     Output: (subj, pred, obj, first_seq, last_seq, is_current).
     """
+    n_runs = int(n_runs)
     pres = runs.select("subj", "pred", "obj", "run_seq").distinct()
     w = Window.partitionBy("subj", "pred", "obj").orderBy("run_seq")
     islands = pres.withColumn(
@@ -107,6 +112,17 @@ def scd2_intervals(runs: DataFrame, n_runs: int) -> DataFrame:
             "obj",
             "first_seq",
             "last_seq",
-            (F.col("last_seq") == F.lit(int(n_runs))).alias("is_current"),
+            F.when(
+                F.col("last_seq") > F.lit(n_runs),
+                F.raise_error(
+                    F.concat(
+                        F.lit("scd2_intervals: run_seq "),
+                        F.col("last_seq").cast("string"),
+                        F.lit(f" exceeds n_runs={n_runs}"),
+                    )
+                ),
+            )
+            .otherwise(F.col("last_seq") == F.lit(n_runs))
+            .alias("is_current"),
         )
     )

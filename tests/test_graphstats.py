@@ -640,12 +640,6 @@ def test_random_walks_laws(spark):
             assert list(r.walk) == ["d"]
         else:
             assert r.walk_len == 6  # this graph has no other early stop
-    # lazy plan agrees with the pinned one
-    lazy = {(r.start_label, r.walk_id): list(r.walk)
-            for r in graphstats.random_walks(
-                _triples_df(spark, edges), length=6, walks_per_node=2,
-                materialize=False).collect()}
-    assert lazy == {(r.start_label, r.walk_id): list(r.walk) for r in rows}
 
 
 def test_random_walks_validates(spark):
@@ -1012,3 +1006,21 @@ def test_run_embedding_prep_job_biased_walks(spark, prep_graph, tmp_path):
     materialized = {(r.start_label, r.walk_id): list(r.walk)
                     for r in spark.read.parquet(prep_out + "/walks").collect()}
     assert materialized == direct
+
+
+def test_run_embedding_prep_rejects_weights_without_biased(tmp_path):
+    """A walk weight without --biased would be silently ignored (uniform
+    walks, a manifest recording no weights): the job refuses it."""
+    import sys
+
+    sys.path.insert(0, "jobs")
+    try:
+        import run_embedding_prep
+    finally:
+        sys.path.pop(0)
+    with pytest.raises(SystemExit) as exc:
+        run_embedding_prep.main(
+            ["--graph", str(tmp_path / "graph"), "--out", str(tmp_path / "out"),
+             "--w-near", "3"]
+        )
+    assert exc.value.code == 2

@@ -276,3 +276,43 @@ def test_label_lsh_shingles_once_and_never_in_verification(spark):
     )
     sets_.collect()
     assert _physical(spark, sets_).count("array_distinct") == 1
+
+
+def test_operators_take_no_pin_switches():
+    """Pinning is one policy (kgx.functions.plan.pin), not a per-operator
+    knob: no public operator may grow a ``materialize`` or
+    ``assume_distinct`` parameter back."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    import kgx.operators
+
+    banned = {"materialize", "assume_distinct"}
+    found = []
+    for info in pkgutil.iter_modules(kgx.operators.__path__):
+        mod = importlib.import_module(f"kgx.operators.{info.name}")
+        for name, obj in vars(mod).items():
+            if name.startswith("_") or not callable(obj):
+                continue
+            if getattr(obj, "__module__", None) != mod.__name__:
+                continue
+            params = inspect.signature(obj).parameters
+            found += [f"{mod.__name__}.{name}({p})" for p in banned & set(params)]
+    assert not found, found
+
+
+def test_local_checkpoint_only_inside_plan_pin():
+    """Every pin in kgx/ goes through plan.pin: no other kgx source file
+    mentions ``localCheckpoint``."""
+    import pathlib
+
+    import kgx
+
+    root = pathlib.Path(kgx.__file__).parent
+    hits = sorted(
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if "localCheckpoint" in p.read_text()
+    )
+    assert hits == ["functions/plan.py"], hits

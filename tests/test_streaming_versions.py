@@ -4,6 +4,7 @@ import os
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from kgx.plans import versions
@@ -364,3 +365,15 @@ def test_scd2_intervals_gaps_and_islands(spark):
         ("e", 1, 2, False),
         ("g", 2, 2, False),
     }
+
+
+def test_scd2_intervals_rejects_stale_n_runs(spark):
+    """A run_seq beyond n_runs means the caller's n_runs is stale: rather
+    than silently marking nothing at the true newest run current, the
+    query fails and names the offending run."""
+    runs = spark.createDataFrame(
+        [("a", "r", "b", 1), ("a", "r", "b", 3), ("c", "r", "d", 2)],
+        "subj string, pred string, obj string, run_seq long",
+    )
+    with pytest.raises(Exception, match="run_seq 3 exceeds n_runs=2"):
+        versions.scd2_intervals(runs, n_runs=2).collect()
