@@ -1,10 +1,17 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query entry points (PySpark target): the flagship entry and the query registry.
 
 ``entry(spark)`` runs the flagship KG pipeline (documents → interleaved
 spans → Arrow-batched extraction → label-resolved triples) at sf0.001.
-``queries()`` exposes every implemented operator from SURVEY.md §2 over the
-driver testdata; ``oracle_sql()`` gives the DuckDB-equivalent SQL, generated
-from the same pattern tables the engine executes (kgx.oracles).
+
+Every implemented operator from SURVEY.md §2 is one row of a single
+registry table, ``_registry()``: ``name → (engine builder, oracle builder,
+gate params)``, in gate order.  The engine builder is a ``q_*`` function
+``(spark, sf_dir, **params) -> DataFrame``; the oracle builder is a
+``kgx.oracles`` function ``(**params) -> str`` that renders the
+DuckDB-equivalent SQL from the same pattern tables the engine executes.
+Each gate parameter is stated once, in its row, and feeds both sides, so
+the engine and its oracle cannot drift apart.  ``queries()`` and
+``oracle_sql()`` are the two views of that table that callers use.
 """
 
 from __future__ import annotations
@@ -12,6 +19,7 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Callable
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -145,7 +153,9 @@ def q_link_canonical_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     return linking.canonical_triples(extract.triples_table(g), cmap)
 
 
-def q_link_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_link_minhash_pairs(
+    spark: SparkSession, sf_dir: str, min_jaccard: float
+) -> DataFrame:
     """MinHash-LSH similarity candidates over char shingles (SURVEY §2.5 JN5).
     md5-derived universal-hash MinHash + banded LSH + exact-Jaccard verify —
     fully deterministic and mirrored by a DuckDB oracle (kgx.oracles
@@ -153,7 +163,7 @@ def q_link_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kgx.operators import extract, linking
 
     labels = linking.distinct_labels(extract.nodes_table(_graphs(spark, sf_dir)))
-    return linking.minhash_edges(labels, min_jaccard=0.7)
+    return linking.minhash_edges(labels, min_jaccard=min_jaccard)
 
 
 # --- training-data pipeline extras (raw documents / embeddings tables) ----
@@ -178,48 +188,50 @@ def q_dedup_exact(spark, sf_dir):
     return dedup.exact_groups(_documents(spark, sf_dir))
 
 
-def q_dedup_jaccard_pairs(spark, sf_dir):
+def q_dedup_jaccard_pairs(spark, sf_dir, threshold, max_shingle_df):
     """Exact word-3-gram Jaccard similarity join via inverted shingle index,
-    with the hot-shingle guard ON (``max_shingle_df=50``): shingles occurring
-    in more than 50 docs are dropped before the self-join, bounding the
-    inverted-index blowup on boilerplate-heavy corpora.  The driver corpus'
-    max shingle df is 7, so the guard is semantics-neutral here — the oracle
-    applies the identical cutoff."""
+    with the hot-shingle guard ON (``max_shingle_df``, 50 at the gate):
+    shingles occurring in more than that many docs are dropped before the
+    self-join, bounding the inverted-index blowup on boilerplate-heavy
+    corpora.  The gate corpus' max shingle df is 7, so the guard is
+    semantics-neutral here — the oracle applies the identical cutoff."""
     from kgx.operators import dedup
 
     return dedup.ngram_jaccard_pairs(
-        _documents(spark, sf_dir), threshold=0.5, max_shingle_df=50
+        _documents(spark, sf_dir), threshold=threshold,
+        max_shingle_df=max_shingle_df,
     )
 
 
-def q_dedup_minhash_lsh(spark, sf_dir):
+def q_dedup_minhash_lsh(spark, sf_dir, threshold):
     """MinHash signatures (zero-shuffle array aggregates) → banded LSH
     buckets → exact-Jaccard-verified near-dup pairs."""
     from kgx.operators import dedup
 
-    return dedup.minhash_lsh_pairs(_documents(spark, sf_dir), threshold=0.5)
+    return dedup.minhash_lsh_pairs(_documents(spark, sf_dir), threshold=threshold)
 
 
-def q_dedup_clusters(spark, sf_dir):
+def q_dedup_clusters(spark, sf_dir, threshold):
     """Corpus near-dup clustering: LSH pairs -> connected components ->
     canonical doc per cluster, every doc covered (keep-one dedup policy)."""
     from kgx.operators import dedup
 
-    return dedup.near_dup_clusters(_documents(spark, sf_dir), threshold=0.5)
+    return dedup.near_dup_clusters(_documents(spark, sf_dir), threshold=threshold)
 
 
-def q_dedup_simhash_pairs(spark, sf_dir):
+def q_dedup_simhash_pairs(spark, sf_dir, max_bucket):
     """64-bit SimHash fingerprints, banded candidates, Hamming <= 3, with
-    the band-bucket skew guard ON (``max_bucket=200``, mirroring the MinHash
-    guard): a boilerplate cluster can no longer enumerate O(B²) rows in one
-    15-bit bucket.  At the sf0.01 gate scale the largest band bucket is far
-    below the cap, so the guard is semantics-neutral there (identical 2932
-    rows) and the oracle applies the identical cutoff; at sf0.1 the corpus
-    HAS near-identical flood clusters and the cap drops them (34k vs 272k
-    uncapped pairs) — the designed behavior."""
+    the band-bucket skew guard ON (``max_bucket``, 200 at the gate,
+    mirroring the MinHash guard): a boilerplate cluster can no longer
+    enumerate O(B²) rows in one 15-bit bucket.  At the sf0.01 gate scale
+    the largest band bucket is far below the cap, so the guard is
+    semantics-neutral there (identical 2932 rows) and the oracle applies
+    the identical cutoff; at sf0.1 the corpus HAS near-identical flood
+    clusters and the cap drops them (34k vs 272k uncapped pairs) — the
+    designed behavior."""
     from kgx.operators import dedup
 
-    return dedup.simhash_pairs(_documents(spark, sf_dir), max_bucket=200)
+    return dedup.simhash_pairs(_documents(spark, sf_dir), max_bucket=max_bucket)
 
 
 def q_ann_topk(spark, sf_dir):
@@ -230,42 +242,46 @@ def q_ann_topk(spark, sf_dir):
     return similarity.cosine_topk(_embeddings(spark, sf_dir))
 
 
-def q_ann_ivf_topk(spark, sf_dir):
+def q_ann_ivf_topk(spark, sf_dir, target_cell_size):
     """IVF-bucketed ANN: nprobe cells per query, exact rerank inside."""
     from kgx.operators import similarity
 
-    return similarity.ivf_topk(_embeddings(spark, sf_dir), target_cell_size=32)
+    return similarity.ivf_topk(
+        _embeddings(spark, sf_dir), target_cell_size=target_cell_size
+    )
 
 
-def q_emb_near_dup_pairs(spark, sf_dir):
+def q_emb_near_dup_pairs(spark, sf_dir, target_cell_size):
     """Embedding-cosine near-duplicate pairs above a floor."""
     from kgx.operators import similarity
 
     return similarity.embedding_near_dup_pairs(
-        _embeddings(spark, sf_dir), target_cell_size=32
+        _embeddings(spark, sf_dir), target_cell_size=target_cell_size
     )
 
 
-def q_emb_kmeans(spark, sf_dir):
+def q_emb_kmeans(spark, sf_dir, rounds, target_cluster_size):
     """Integer-arithmetic Lloyd's k-means over the embedding column
     (SemDeDup-style corpus clustering; broadcast centroids, map-side-combined
     posexplode update — shuffle per round is partitions x k x dim rows)."""
     from kgx.operators import clustering
 
     return clustering.kmeans_assign(
-        _embeddings(spark, sf_dir), rounds=2, target_cluster_size=64
+        _embeddings(spark, sf_dir), rounds=rounds,
+        target_cluster_size=target_cluster_size,
     )
 
 
-def q_seq_pack_interleaved(spark, sf_dir):
+def q_seq_pack_interleaved(spark, sf_dir, capacity, n_shards, media_token_cost):
     """Multimodal sequence packing over the interleaved span table: media
-    spans cost a fixed vision-encoder token budget (576 = 24x24 patches);
-    per-doc cost from the span array with zero explode, then the per-shard
-    packing window."""
+    spans cost a fixed vision-encoder token budget (576 = 24x24 patches at
+    the gate); per-doc cost from the span array with zero explode, then the
+    per-shard packing window."""
     from kgx.operators import packing
 
     return packing.seq_pack_interleaved(
-        _spans(spark, sf_dir), capacity=4096, n_shards=8, media_token_cost=576
+        _spans(spark, sf_dir), capacity=capacity, n_shards=n_shards,
+        media_token_cost=media_token_cost,
     )
 
 
@@ -279,7 +295,7 @@ def q_media_captions(spark, sf_dir):
     return media.media_caption_pairs(flat)
 
 
-def q_hll_registers(spark, sf_dir):
+def q_hll_registers(spark, sf_dir, m):
     """HyperLogLog register sketch of distinct event ids — engine-neutral
     md5-60 hashing + bin()-based leading-zero rank, so the register table
     (the mergeable state a 100 TB job stores) is oracle-replayable; shuffle
@@ -288,12 +304,12 @@ def q_hll_registers(spark, sf_dir):
     from kgx.sources.docs import spread_small_scan
 
     ev = spread_small_scan(spark, spark.read.parquet(f"{sf_dir}/events.parquet"))
-    return sketches.hll_registers(ev, "cast(event_id as string)", m=64)
+    return sketches.hll_registers(ev, "cast(event_id as string)", m=m)
 
 
-def q_cm_registers(spark, sf_dir):
+def q_cm_registers(spark, sf_dir, depth, width):
     """Count-min counter table over event ids (NEW r4) — the frequency
-    sibling of the HLL sketch: one md5 per row feeds a depth-4
+    sibling of the HLL sketch: one md5 per row feeds a depth-row
     universal-hash family, counters are element-wise-sum mergeable, and
     the shuffle carries <= partitions x depth x width pre-combined rows."""
     from kgx.operators import sketches
@@ -301,44 +317,43 @@ def q_cm_registers(spark, sf_dir):
 
     ev = spread_small_scan(spark, spark.read.parquet(f"{sf_dir}/events.parquet"))
     return sketches.cm_registers(
-        ev, "cast(user_id as string)", depth=4, width=256
+        ev, "cast(user_id as string)", depth=depth, width=width
     )
 
 
-def q_inverted_postings(spark, sf_dir):
+def q_inverted_postings(spark, sf_dir, min_df, max_df):
     """Inverted token index (token, doc_id, tf, df) — retrieval-side
     companion to ANN; df cutoffs bound posting lists like the hot-shingle
     guard."""
     from kgx.operators import indexing
 
-    return indexing.inverted_postings(_documents(spark, sf_dir), min_df=2, max_df=400)
+    return indexing.inverted_postings(
+        _documents(spark, sf_dir), min_df=min_df, max_df=max_df
+    )
 
 
-def q_lm_trigram_counts(spark, sf_dir):
+def q_lm_trigram_counts(spark, sf_dir, n, min_count):
     """Trigram LM count table with Kneser-Ney continuation counts."""
     from kgx.operators import indexing
 
-    return indexing.lm_ngram_counts(_documents(spark, sf_dir), n=3, min_count=2)
+    return indexing.lm_ngram_counts(
+        _documents(spark, sf_dir), n=n, min_count=min_count
+    )
 
 
-#: bm25_topk gate parameters — shared by the query and its oracle so they
-#: can never drift; 'dup' is the one rare token in the driver vocabulary
-#: (df/N ≈ 0.05 → idf_bits 5), the others are common (idf_bits 1), so the
-#: ranking exercises both idf extremes plus tf/length normalization.
-BM25_GATE = dict(query_terms=["dup", "window", "join", "hash"], k=25)
-
-
-def q_bm25_topk(spark, sf_dir):
+def q_bm25_topk(spark, sf_dir, query_terms, k):
     """Fixed-point BM25 top-k keyword retrieval (NEW r5) — targeted data
     selection over the inverted index: bigint score (log2-bit-length idf,
     milli-scaled saturation/length-norm ratio), TakeOrderedAndProject
     top-k, deterministic (score DESC, doc_id) tie-break."""
     from kgx.operators import indexing
 
-    return indexing.bm25_topk(_documents(spark, sf_dir), **BM25_GATE)
+    return indexing.bm25_topk(
+        _documents(spark, sf_dir), query_terms=query_terms, k=k
+    )
 
 
-def q_graph_random_walks(spark, sf_dir):
+def q_graph_random_walks(spark, sf_dir, length, walks_per_node):
     """DeepWalk-style deterministic walk corpus over the extracted KG
     (NEW r5) — graph→sequence export for skip-gram training: md5-60
     step choices over sorted adjacency arrays, one equi-join per step."""
@@ -346,24 +361,20 @@ def q_graph_random_walks(spark, sf_dir):
 
     return graphstats.random_walks(
         extract.triples_table(_graphs(spark, sf_dir)),
-        length=4,
-        walks_per_node=2,
+        length=length,
+        walks_per_node=walks_per_node,
     )
 
 
-def q_walk_skipgram_pairs(spark, sf_dir):
+def q_walk_skipgram_pairs(spark, sf_dir, length, walks_per_node, window):
     """Skip-gram (center, context) pair counts over the deterministic
     walk corpus (NEW r5) — in-row window enumeration, one map-side-
     combined count shuffle: the node2vec training table."""
-    from kgx.operators import extract, graphstats
+    from kgx.operators import graphstats
 
     return graphstats.walk_skipgram_pairs(
-        graphstats.random_walks(
-            extract.triples_table(_graphs(spark, sf_dir)),
-            length=4,
-            walks_per_node=2,
-        ),
-        window=2,
+        q_graph_random_walks(spark, sf_dir, length, walks_per_node),
+        window=window,
     )
 
 
@@ -376,32 +387,34 @@ def q_unigram_surprisal(spark, sf_dir):
     return indexing.unigram_surprisal(_documents(spark, sf_dir))
 
 
-def q_semdedup(spark, sf_dir):
+def q_semdedup(spark, sf_dir, rounds, min_cosine, target_cluster_size):
     """SemDeDup: k-means bucketing + within-cluster cosine ball, keep-first
     (cluster equi-join is the only shuffle beyond k-means; k sized so
     clusters stay bounded at corpus scale)."""
     from kgx.operators import clustering
 
     return clustering.semdedup(
-        _embeddings(spark, sf_dir), rounds=2, min_cosine=0.4,
-        target_cluster_size=64,
+        _embeddings(spark, sf_dir), rounds=rounds, min_cosine=min_cosine,
+        target_cluster_size=target_cluster_size,
     )
 
 
-def q_seq_pack(spark, sf_dir):
-    """Concat-then-chunk sequence packing into 128-token training sequences,
-    windowed PER SHARD (never a global sort)."""
+def q_seq_pack(spark, sf_dir, capacity, n_shards):
+    """Concat-then-chunk sequence packing into ``capacity``-token training
+    sequences, windowed PER SHARD (never a global sort)."""
     from kgx.operators import packing
 
-    return packing.seq_pack(_documents(spark, sf_dir), capacity=128, n_shards=8)
+    return packing.seq_pack(
+        _documents(spark, sf_dir), capacity=capacity, n_shards=n_shards
+    )
 
 
-def q_shard_manifest(spark, sf_dir):
+def q_shard_manifest(spark, sf_dir, n_shards):
     """Per-shard export manifest with an order-independent doc-set
     checksum."""
     from kgx.operators import packing
 
-    return packing.shard_manifest(_documents(spark, sf_dir), n_shards=8)
+    return packing.shard_manifest(_documents(spark, sf_dir), n_shards=n_shards)
 
 
 def q_token_mix(spark, sf_dir):
@@ -429,11 +442,11 @@ def q_repetition_stats(spark, sf_dir):
     return textstats.repetition_stats(_documents(spark, sf_dir))
 
 
-def q_quality_filter(spark, sf_dir):
+def q_quality_filter(spark, sf_dir, min_tokens):
     """Gopher/C4 composite quality gate: named rule verdicts per doc."""
     from kgx.operators import textstats
 
-    return textstats.quality_filter(_documents(spark, sf_dir), min_tokens=20)
+    return textstats.quality_filter(_documents(spark, sf_dir), min_tokens=min_tokens)
 
 
 def q_token_counts(spark, sf_dir):
@@ -443,12 +456,12 @@ def q_token_counts(spark, sf_dir):
     return textstats.token_counts(_documents(spark, sf_dir))
 
 
-def q_vocab_topk(spark, sf_dir):
-    """Tokenizer-prep vocabulary head: global top-200 tokens by count with
+def q_vocab_topk(spark, sf_dir, k):
+    """Tokenizer-prep vocabulary head: global top-k tokens by count with
     document frequency (map-side combine then TakeOrderedAndProject)."""
     from kgx.operators import textstats
 
-    return textstats.vocab_topk(_documents(spark, sf_dir), k=200)
+    return textstats.vocab_topk(_documents(spark, sf_dir), k=k)
 
 
 def q_pii_scrub(spark, sf_dir):
@@ -506,7 +519,7 @@ def q_graph_pagerank(spark, sf_dir):
     return graphstats.pagerank(extract.triples_table(_graphs(spark, sf_dir)))
 
 
-def q_graph_entity_pmi(spark, sf_dir):
+def q_graph_entity_pmi(spark, sf_dir, min_co):
     """Document-level entity co-occurrence with exact-integer lift scores
     (NEW r4): the edge-weighting signal for entity linking / KG
     completion, in floor-divided basis points so the oracle matches where
@@ -515,11 +528,11 @@ def q_graph_entity_pmi(spark, sf_dir):
     from kgx.operators import extract, graphstats
 
     return graphstats.entity_cooccurrence(
-        extract.nodes_table(_graphs(spark, sf_dir)), min_co=2
+        extract.nodes_table(_graphs(spark, sf_dir)), min_co=min_co
     )
 
 
-def q_graph_label_prop(spark, sf_dir):
+def q_graph_label_prop(spark, sf_dir, iters):
     """Deterministic frequency-vote label propagation over the extracted
     KG (NEW r4): the community-granularity sibling of the canonicalization
     CC merge — per round one keyed join + count + per-node top-1 window,
@@ -528,7 +541,7 @@ def q_graph_label_prop(spark, sf_dir):
     from kgx.operators import extract, graphstats
 
     return graphstats.label_propagation(
-        extract.triples_table(_graphs(spark, sf_dir)), iters=3
+        extract.triples_table(_graphs(spark, sf_dir)), iters=iters
     )
 
 
@@ -543,7 +556,7 @@ def q_graph_triangles(spark, sf_dir):
     return graphstats.triangle_counts(extract.triples_table(_graphs(spark, sf_dir)))
 
 
-def q_graph_link_candidates(spark, sf_dir):
+def q_graph_link_candidates(spark, sf_dir, max_degree, min_common):
     """Common-neighbor link-prediction candidates over the KG (NEW r4):
     in-row wedge enumeration from sorted neighbor arrays with a
     max_degree hub cap (a degree-d hub would emit d² pairs — same
@@ -552,7 +565,8 @@ def q_graph_link_candidates(spark, sf_dir):
     from kgx.operators import extract, graphstats
 
     return graphstats.common_neighbor_candidates(
-        extract.triples_table(_graphs(spark, sf_dir)), max_degree=64, min_common=2
+        extract.triples_table(_graphs(spark, sf_dir)),
+        max_degree=max_degree, min_common=min_common,
     )
 
 
@@ -567,39 +581,45 @@ def q_kg_version_diff(spark, sf_dir):
     from kgx.operators import extract
     from kgx.plans import versions
 
-    t = extract.triples_table(_graphs(spark, sf_dir))
-    dnum = "cast(substr(doc_id, 5) as bigint)"  # doc_id = 'doc-<n>'
-    old = t.where(f"pred != 'acquired' AND {dnum} % 3 != 0")
-    new = t.where(f"{dnum} % 5 != 4")
+    old, new = _run_slices(extract.triples_table(_graphs(spark, sf_dir)))
     return versions.snapshot_diff(old, new, ["doc_id", "subj", "pred", "obj"])
 
 
-def q_kg_negative_samples(spark, sf_dir):
+def _run_slices(t: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The (old, new) simulated runs of ``q_kg_version_diff``."""
+    dnum = "cast(substr(doc_id, 5) as bigint)"  # doc_id = 'doc-<n>'
+    return (
+        t.where(f"pred != 'acquired' AND {dnum} % 3 != 0"),
+        t.where(f"{dnum} % 5 != 4"),
+    )
+
+
+def q_kg_negative_samples(spark, sf_dir, k, buckets):
     """Hash-bucketed negative sampling for KG-embedding training (NEW
-    r4): k=2 corrupted objects per distinct triple, chosen by pure md5-60
+    r4): k corrupted objects per distinct triple, chosen by pure md5-60
     arithmetic over a per-bucket-numbered node table — bounded per-bucket
     sorts instead of a global row_number, broadcast bucket sizes, one
     (bucket, idx) equi-join."""
     from kgx.operators import extract, graphstats
 
     return graphstats.negative_samples(
-        extract.triples_table(_graphs(spark, sf_dir)), k=2, buckets=64
+        extract.triples_table(_graphs(spark, sf_dir)), k=k, buckets=buckets
     )
 
 
-def q_kg_training_pairs(spark, sf_dir):
+def q_kg_training_pairs(spark, sf_dir, k, buckets):
     """The composed KG-embedding training set (NEW r4): distinct triples
-    as positives UNION their k=2 hash-corrupted negatives — what a
+    as positives UNION their k hash-corrupted negatives — what a
     TransE-family trainer consumes, produced in one lazy plan over the
     persisted extraction."""
     from kgx.operators import extract, graphstats
 
     return graphstats.training_pairs(
-        extract.triples_table(_graphs(spark, sf_dir)), k=2, buckets=64
+        extract.triples_table(_graphs(spark, sf_dir)), k=k, buckets=buckets
     )
 
 
-def q_kg_transe_margin(spark, sf_dir):
+def q_kg_transe_margin(spark, sf_dir, k, buckets, dim, modulus):
     """Per-predicate TransE energy audit of the composed training set
     (NEW r5): L1 energy of every positive/negative pair under
     deterministic hash-derived integer embeddings, aggregated to the
@@ -607,18 +627,14 @@ def q_kg_transe_margin(spark, sf_dir):
     gradient step.  One pure integer projection + one map-side-combined
     aggregate on the 16-value pred key over training_pairs' bounded
     plan."""
-    from kgx.operators import extract, graphstats
+    from kgx.operators import graphstats
 
     return graphstats.transe_margin(
-        graphstats.training_pairs(
-            extract.triples_table(_graphs(spark, sf_dir)), k=2, buckets=64
-        ),
-        dim=8,
-        modulus=1024,
+        q_kg_training_pairs(spark, sf_dir, k, buckets), dim=dim, modulus=modulus
     )
 
 
-def q_pq_codes(spark, sf_dir):
+def q_pq_codes(spark, sf_dir, m, k, rounds):
     """Product-quantization codes over the embeddings table (NEW r5):
     per-subspace integer Lloyd's k-means, argmin-L2 code per (vector,
     subspace) — the compression half of IVF-PQ beside ann_ivf_topk's
@@ -627,10 +643,10 @@ def q_pq_codes(spark, sf_dir):
     from kgx.operators.clustering import pq_codes
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return pq_codes(emb, m=8, k=16, rounds=2)
+    return pq_codes(emb, m=m, k=k, rounds=rounds)
 
 
-def q_pq_topk(spark, sf_dir):
+def q_pq_topk(spark, sf_dir, n_queries, k, m, k_codes, rounds):
     """PQ asymmetric-distance top-k search (NEW r5): queries score every
     database vector by summing broadcast-LUT subspace distances over its
     m compressed codes — the retrieval half of IVF-PQ beside
@@ -639,10 +655,14 @@ def q_pq_topk(spark, sf_dir):
     from kgx.operators.clustering import pq_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return pq_topk(emb, n_queries=8, k=5, m=8, k_codes=16, rounds=2)
+    return pq_topk(
+        emb, n_queries=n_queries, k=k, m=m, k_codes=k_codes, rounds=rounds
+    )
 
 
-def q_ann_ivfpq_topk(spark, sf_dir):
+def q_ann_ivfpq_topk(
+    spark, sf_dir, n_queries, k, n_centroids, nprobe, m, k_codes, rounds
+):
     """Composed IVF-PQ search (NEW r5): coarse IVF probes restrict each
     query to nprobe cells, candidates ranked by PQ asymmetric distance —
     the full billion-vector ANN architecture, completing
@@ -652,12 +672,12 @@ def q_ann_ivfpq_topk(spark, sf_dir):
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return ivf_pq_topk(
-        emb, n_queries=8, k=5, n_centroids=16, nprobe=4,
-        m=8, k_codes=16, rounds=2,
+        emb, n_queries=n_queries, k=k, n_centroids=n_centroids, nprobe=nprobe,
+        m=m, k_codes=k_codes, rounds=rounds,
     )
 
 
-def q_ann_recall(spark, sf_dir):
+def q_ann_recall(spark, sf_dir, n_queries, k, n_centroids, nprobe):
     """Per-query recall@k audit of the IVF index vs the exact baseline
     (NEW r5): both sides rank by the identical quantized cosine, so any
     miss is attributable to the probe set alone — the quality dial that
@@ -666,10 +686,12 @@ def q_ann_recall(spark, sf_dir):
     from kgx.operators.similarity import ivf_recall
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return ivf_recall(emb, n_queries=8, k=5, n_centroids=16, nprobe=4)
+    return ivf_recall(
+        emb, n_queries=n_queries, k=k, n_centroids=n_centroids, nprobe=nprobe
+    )
 
 
-def q_graph_two_hop(spark, sf_dir):
+def q_graph_two_hop(spark, sf_dir, max_degree):
     """Per-node two-hop neighborhood size over the extracted KG (NEW
     r5): in-row path enumeration under the hub cap, one distinct pair
     shuffle, one anti-join dropping 1-hop edges — the graph-expansion
@@ -677,11 +699,13 @@ def q_graph_two_hop(spark, sf_dir):
     from kgx.operators import extract, graphstats
 
     return graphstats.two_hop_stats(
-        extract.triples_table(_graphs(spark, sf_dir)), max_degree=64
+        extract.triples_table(_graphs(spark, sf_dir)), max_degree=max_degree
     )
 
 
-def q_graph_node2vec_walks(spark, sf_dir):
+def q_graph_node2vec_walks(
+    spark, sf_dir, length, walks_per_node, seed, w_return, w_near, w_far
+):
     """node2vec second-order biased walk corpus (NEW r5): the DeepWalk
     sampler upgraded with integer return/near/far weights — one corpus
     dials between BFS-like and DFS-like neighborhoods.  In-row
@@ -692,12 +716,14 @@ def q_graph_node2vec_walks(spark, sf_dir):
 
     return graphstats.node2vec_walks(
         extract.triples_table(_graphs(spark, sf_dir)),
-        length=4, walks_per_node=2, seed=0,
-        w_return=1, w_near=4, w_far=2,
+        length=length, walks_per_node=walks_per_node, seed=seed,
+        w_return=w_return, w_near=w_near, w_far=w_far,
     )
 
 
-def q_lsh_recall(spark, sf_dir):
+def q_lsh_recall(
+    spark, sf_dir, threshold, max_shingle_df, num_hashes, bands, max_bucket
+):
     """Blocking-quality audit of MinHash-LSH vs the exact Jaccard join
     (NEW r5): the dedup counterpart of ann_recall and the dial that
     sizes bands/num_hashes — every miss is attributable to banding or
@@ -705,12 +731,13 @@ def q_lsh_recall(spark, sf_dir):
     from kgx.operators import dedup
 
     return dedup.lsh_blocking_recall(
-        _documents(spark, sf_dir), threshold=0.5, max_shingle_df=50,
-        num_hashes=16, bands=8, max_bucket=200,
+        _documents(spark, sf_dir), threshold=threshold,
+        max_shingle_df=max_shingle_df, num_hashes=num_hashes, bands=bands,
+        max_bucket=max_bucket,
     )
 
 
-def q_dataset_split(spark, sf_dir):
+def q_dataset_split(spark, sf_dir, val_bp, test_bp, strat_col):
     """Deterministic train/val/test split audit (NEW r5): each doc's
     split is a pure md5 function of its id — leakage-safe under re-runs
     and appends — and this table verifies per-source share_bp.  One
@@ -718,8 +745,8 @@ def q_dataset_split(spark, sf_dir):
     from kgx.operators import curation
 
     return curation.dataset_split(
-        _documents(spark, sf_dir), val_bp=500, test_bp=500,
-        strat_col="source",
+        _documents(spark, sf_dir), val_bp=val_bp, test_bp=test_bp,
+        strat_col=strat_col,
     )
 
 
@@ -734,20 +761,16 @@ def q_kg_scd2_intervals(spark, sf_dir):
     from kgx.plans import versions
 
     t = pin(extract.triples_table(_graphs(spark, sf_dir)))
-    dnum = "cast(substr(doc_id, 5) as bigint)"  # doc_id = 'doc-<n>'
+    old, new = _run_slices(t)
     runs = (
-        t.where(f"pred != 'acquired' AND {dnum} % 3 != 0")
-        .withColumn("run_seq", F.lit(1).cast("long"))
-        .unionByName(
-            t.where(f"{dnum} % 5 != 4")
-            .withColumn("run_seq", F.lit(2).cast("long"))
-        )
+        old.withColumn("run_seq", F.lit(1).cast("long"))
+        .unionByName(new.withColumn("run_seq", F.lit(2).cast("long")))
         .unionByName(t.withColumn("run_seq", F.lit(3).cast("long")))
     )
-    return versions.scd2_intervals(runs, n_runs=3)
+    return versions.scd2_intervals(runs)
 
 
-def q_graph_kcore(spark, sf_dir):
+def q_graph_kcore(spark, sf_dir, k, iters):
     """Synchronous k-core peel over the extracted KG (NEW r4): bounded
     peel rounds drop nodes whose residual degree falls below k — the
     "dense enough to trust" filter run before entity embedding.  Per
@@ -755,10 +778,12 @@ def q_graph_kcore(spark, sf_dir):
     the unrolled DuckDB oracle replays the identical rounds."""
     from kgx.operators import extract, graphstats
 
-    return graphstats.kcore(extract.triples_table(_graphs(spark, sf_dir)), k=2, iters=4)
+    return graphstats.kcore(
+        extract.triples_table(_graphs(spark, sf_dir)), k=k, iters=iters
+    )
 
 
-def q_curation_funnel(spark, sf_dir):
+def q_curation_funnel(spark, sf_dir, min_tokens, max_symbol_ratio):
     """END-TO-END curation funnel over the narrative corpus (SURVEY training-
     data family, composed): quality gate (prose-adjusted symbol cap) → exact
     dedup → MinHash-LSH near-dup connected-components keep-one → PII scrub →
@@ -769,15 +794,15 @@ def q_curation_funnel(spark, sf_dir):
     from kgx.sources import corpus
 
     cfg = CurationConfig(
-        out_dir="", write=False, min_tokens=20,
-        quality_kwargs={"max_symbol_ratio": 0.2},
+        out_dir="", write=False, min_tokens=min_tokens,
+        quality_kwargs={"max_symbol_ratio": max_symbol_ratio},
     )
     return funnel_final(
         corpus.narrative_documents(_documents(spark, sf_dir)), cfg
     )
 
 
-def q_funnel_export(spark, sf_dir):
+def q_funnel_export(spark, sf_dir, n_shards, capacity, min_tokens, max_symbol_ratio):
     """The full pretraining story COMPOSED end-to-end: the five-stage
     curation funnel's survivors flow into the deterministic sharder, the
     per-shard manifest (order-independent doc-set checksum) and the
@@ -787,18 +812,10 @@ def q_funnel_export(spark, sf_dir):
     oracle (kgx.oracles.funnel_export_sql) replays the identical
     composition with the funnel nested as a CTE."""
     from kgx.operators import packing
-    from kgx.plans.curation_pipeline import CurationConfig, funnel_final
-    from kgx.sources import corpus
 
-    cfg = CurationConfig(
-        out_dir="", write=False, min_tokens=20,
-        quality_kwargs={"max_symbol_ratio": 0.2},
-    )
-    curated = funnel_final(
-        corpus.narrative_documents(_documents(spark, sf_dir)), cfg
-    )
-    man = packing.shard_manifest(curated, n_shards=8)
-    pack = packing.seq_pack(curated, capacity=128, n_shards=8)
+    curated = q_curation_funnel(spark, sf_dir, min_tokens, max_symbol_ratio)
+    man = packing.shard_manifest(curated, n_shards=n_shards)
+    pack = packing.seq_pack(curated, capacity=capacity, n_shards=n_shards)
     pstats = pack.groupBy("shard").agg(
         (F.max("last_seq") + 1).cast("long").alias("n_seqs"),
         F.sum((F.col("n_seqs") > 1).cast("long")).cast("long").alias("spanning_docs"),
@@ -818,17 +835,19 @@ def q_balanced_sample(spark, sf_dir):
     return curation.balanced_sample(docs, strata)
 
 
-def q_contamination(spark, sf_dir):
+def q_contamination(spark, sf_dir, bench_mod, n):
     """n-gram decontamination screen vs the deterministic benchmark slice
-    (doc_id % 19 = 0).  n=3 suits this corpus' tiny vocabulary — production
-    eval screens use 8-13-grams — and the benchmark hash set is broadcast
-    (bounded by eval-suite size by construction)."""
+    (doc_id % bench_mod = 0).  n=3 at the gate suits this corpus' tiny
+    vocabulary — production eval screens use 8-13-grams — and the benchmark
+    hash set is broadcast (bounded by eval-suite size by construction)."""
     from kgx.operators import curation
 
-    return curation.contamination_screen(_documents(spark, sf_dir), n=3)
+    return curation.contamination_screen(
+        _documents(spark, sf_dir), bench_mod=bench_mod, n=n
+    )
 
 
-def q_hll_by_group(spark, sf_dir):
+def q_hll_by_group(spark, sf_dir, m):
     """Per-group HLL registers (NEW r4): distinct users per event type as
     one register sketch per group — the dashboard-rollup state (still one
     map-side-combined aggregate over groups × m keys; per-group max-merge
@@ -838,11 +857,11 @@ def q_hll_by_group(spark, sf_dir):
 
     ev = spread_small_scan(spark, spark.read.parquet(f"{sf_dir}/events.parquet"))
     return sketches.hll_registers_grouped(
-        ev, "event_type", "cast(user_id as string)", m=64
+        ev, "event_type", "cast(user_id as string)", m=m
     )
 
 
-def q_cm_heavy_hitters(spark, sf_dir):
+def q_cm_heavy_hitters(spark, sf_dir, threshold, depth, width):
     """Heavy-hitter candidates consumed from the count-min sketch
     in-engine (NEW r4): estimate = min over depth cells via a broadcast
     register join, threshold filter, exact count beside — the
@@ -853,7 +872,8 @@ def q_cm_heavy_hitters(spark, sf_dir):
 
     ev = spread_small_scan(spark, spark.read.parquet(f"{sf_dir}/events.parquet"))
     return sketches.cm_heavy_hitters(
-        ev, "cast(user_id as string)", threshold=75, depth=4, width=256
+        ev, "cast(user_id as string)", threshold=threshold, depth=depth,
+        width=width,
     )
 
 
@@ -870,7 +890,7 @@ def q_hist_registers(spark, sf_dir):
     return sketches.hist_registers(ev, "cast(floor(value * 100) as bigint)")
 
 
-def q_bloom_registers(spark, sf_dir):
+def q_bloom_registers(spark, sf_dir, bench_mod, n, m_bits, k):
     """Bloom-filter bitmap of the benchmark slice's shingle hashes (NEW
     r4) — the membership sibling of the HLL/count-min sketches: 32-bit
     words, double-hashed positions, element-wise bit_or mergeable.  The
@@ -879,14 +899,14 @@ def q_bloom_registers(spark, sf_dir):
     from kgx.operators import sketches
     from kgx.operators.dedup import shingle_table
 
-    sh = shingle_table(_documents(spark, sf_dir), n=3)
-    bench = sh.where(F.col("doc_id") % 19 == 0)
+    sh = shingle_table(_documents(spark, sf_dir), n=n)
+    bench = sh.where(F.col("doc_id") % bench_mod == 0)
     return sketches.bloom_registers(
-        bench, "shingle_hash", m_bits=65536, k=4, pre_hashed=True
+        bench, "shingle_hash", m_bits=m_bits, k=k, pre_hashed=True
     )
 
 
-def q_bloom_contamination(spark, sf_dir):
+def q_bloom_contamination(spark, sf_dir, bench_mod, n, m_bits, k):
     """Bloom-probe decontamination screen (NEW r4): every train shingle
     checks its k bits against the broadcast benchmark bitmap — no false
     negatives (superset of the exact `contamination` screen's hits), a
@@ -895,13 +915,10 @@ def q_bloom_contamination(spark, sf_dir):
     from kgx.operators import sketches
     from kgx.operators.dedup import shingle_table
 
-    sh = shingle_table(_documents(spark, sf_dir), n=3)
-    bench = sh.where(F.col("doc_id") % 19 == 0)
-    regs = sketches.bloom_registers(
-        bench, "shingle_hash", m_bits=65536, k=4, pre_hashed=True
-    )
+    sh = shingle_table(_documents(spark, sf_dir), n=n)
+    regs = q_bloom_registers(spark, sf_dir, bench_mod, n, m_bits, k)
     return sketches.bloom_probe(
-        sh.where(F.col("doc_id") % 19 != 0), regs, m_bits=65536, k=4
+        sh.where(F.col("doc_id") % bench_mod != 0), regs, m_bits=m_bits, k=k
     )
 
 
@@ -939,14 +956,14 @@ def q_asof_last_click(spark, sf_dir):
     )
 
 
-def q_sessions(spark, sf_dir):
-    """Gap-based sessionization (6 h inactivity gap) via Spark's native
+def q_sessions(spark, sf_dir, gap_sec):
+    """Gap-based sessionization (6 h inactivity gap at the gate) via Spark's native
     session_window aggregate; the oracle re-derives the same sessions with
     the gaps-and-islands window cascade — an independent formulation."""
     from kgx.operators.temporal import sessionize
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return sessionize(ev, key="user_id", ts="ts", gap_sec=21600)
+    return sessionize(ev, key="user_id", ts="ts", gap_sec=gap_sec)
 
 
 def q_range_clicks_before_purchase(spark, sf_dir):
@@ -1082,7 +1099,7 @@ def q_p10_media_security(spark, sf_dir):
     return out.withColumnRenamed("media_ref", "ref")
 
 
-def q_s5_csv_prose(spark, sf_dir):
+def q_s5_csv_prose(spark, sf_dir, rows_per_doc):
     """Reference CSV semantics: rows flattened to comma-joined prose lines,
     batched into documents (SURVEY S5; reference services.py:55-62)."""
     c = spark.read.parquet(f"{sf_dir}/customer.parquet")
@@ -1092,7 +1109,7 @@ def q_s5_csv_prose(spark, sf_dir):
     )
     return (
         c.select(
-            F.expr("c_custkey div 50").alias("prose_doc_id"),
+            F.expr(f"c_custkey div {rows_per_doc}").alias("prose_doc_id"),
             F.struct(F.col("c_custkey").alias("k"), F.expr(line).alias("l")).alias("s"),
         )
         .groupBy("prose_doc_id")
@@ -1149,9 +1166,9 @@ def q_audio_decode_real(spark, sf_dir):
     return media.decode_audio_bytes(media.synthesize_audio_blobs(inv))
 
 
-def q_media_resize_real(spark, sf_dir):
+def q_media_resize_real(spark, sf_dir, max_w, max_h):
     """LIVE thumbnailing over real bytes (NEW r4): synthesized BMP/PPM
-    blobs are decoded, nearest-neighbor aspect-fit resampled to 8×8, RE-
+    blobs are decoded, nearest-neighbor aspect-fit resampled to max_w×max_h, RE-
     ENCODED in the same container, and decoded back — the whole loop on
     real bytes, no fake path.  The oracle recomputes target dims from the
     shared aspect-fit integer formula and the thumb means from the solid
@@ -1160,7 +1177,7 @@ def q_media_resize_real(spark, sf_dir):
 
     inv = media.media_inventory(spans_op.explode_spans(_spans(spark, sf_dir)))
     return media.resize_media_real(
-        media.synthesize_media_blobs(inv), max_w=8, max_h=8
+        media.synthesize_media_blobs(inv), max_w=max_w, max_h=max_h
     )
 
 
@@ -1188,14 +1205,14 @@ def q_video_frames_real(spark, sf_dir):
     return media.video_frame_means(media.synthesize_video_blobs(inv))
 
 
-def q_media_frames(spark, sf_dir):
+def q_media_frames(spark, sf_dir, fps):
     """Video frame sampling through the 1→N Arrow explode path (fake frame
     synthesis; counts agree with media_decode's frames column).  Binary
     frames compared as hex so DuckDB reproduces them."""
     from kgx.operators import media, spans as spans_op
 
     inv = media.media_inventory(spans_op.explode_spans(_spans(spark, sf_dir)))
-    fr = media.frame_sample(inv, fps=4, fake=True)
+    fr = media.frame_sample(inv, fps=fps, fake=True)
     return fr.select(
         "doc_id",
         "media_ref",
@@ -1205,13 +1222,13 @@ def q_media_frames(spark, sf_dir):
     )
 
 
-def q_media_resize(spark, sf_dir):
+def q_media_resize(spark, sf_dir, max_w, max_h):
     """Image aspect-fit thumbnails (exact integer dims, fake bytes) through
     the Arrow batch path."""
     from kgx.operators import media, spans as spans_op
 
     inv = media.media_inventory(spans_op.explode_spans(_spans(spark, sf_dir)))
-    rz = media.resize_media(inv, max_w=64, max_h=64, fake=True)
+    rz = media.resize_media(inv, max_w=max_w, max_h=max_h, fake=True)
     return rz.select(
         "doc_id",
         "media_ref",
@@ -1243,7 +1260,7 @@ def q_s7_llm_fake_edges(spark, sf_dir):
     )
 
 
-def q_s2_binary_ingest(spark, sf_dir):
+def q_s2_binary_ingest(spark, sf_dir, max_doc_id):
     """S2/S3 binary-file ingest (reference services.py:20-62): documents
     materialized as raw files (even ids → length-prefixed KGXB binary
     container, odd ids → plain .txt), scanned with binaryFile and
@@ -1252,7 +1269,7 @@ def q_s2_binary_ingest(spark, sf_dir):
     the documents table."""
     from kgx.sources import binary
 
-    fix_dir = binary.ensure_binary_fixture(sf_dir, max_doc_id=400)
+    fix_dir = binary.ensure_binary_fixture(sf_dir, max_doc_id=max_doc_id)
     files = binary.load_binary_docs(spark, fix_dir, glob="doc_*")
     return binary.extract_binary_text(files)
 
@@ -1366,7 +1383,7 @@ def q_latest_event_per_user(spark, sf_dir):
     )
 
 
-def q_retention_tail(spark, sf_dir):
+def q_retention_tail(spark, sf_dir, keep):
     """Delete-set beyond newest K per group (cleanup job, SURVEY A6/W3)."""
     from pyspark.sql.window import Window
 
@@ -1374,7 +1391,7 @@ def q_retention_tail(spark, sf_dir):
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     return (
         ev.withColumn("rn", F.row_number().over(w))
-        .where("rn > 3")
+        .where(F.col("rn") > keep)
         .select("user_id", "event_id")
     )
 
@@ -1475,71 +1492,91 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_kg_triples(spark, "/root/testdata/sf0.001")
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """All 104 oracle-backed queries.  THE ORDER IS LOAD-BEARING: the
-    driver's correctness gate records the FIRST 50 entries only, so the
-    dict is split into an explicit gate set (the 50 highest-information
-    rows: the full reference extraction contract kg_*/link_*, every dedup
-    / similarity / curation family head, and this round's bugfix witness
-    s2_binary_ingest) followed by the rotation remainder (54 rows, every
-    one still oracle-backed).  docs/COVERAGE.md maps each remainder row to
-    its judge-verifiable one-liner:
+def _registry() -> dict[str, tuple[Callable[..., DataFrame], Callable[..., str], dict]]:
+    """THE query registry: ``name → (engine builder, oracle builder, gate
+    params)``.  ``queries()`` and ``oracle_sql()`` are views of it, so every
+    gate value below feeds both engines from this one place: a value both
+    builders take under the same name is a param, never a literal in a
+    ``q_*`` body (tests/test_entry_queries.py scans for that).  An oracle
+    argument that differs only by SQL dialect stays bound inside its oracle
+    builder (``cm_registers``' ``varchar`` cast).
+
+    THE ORDER IS LOAD-BEARING: the correctness gate records the
+    FIRST 50 entries only, so the table is split into an explicit gate set
+    (the 50 highest-information rows: the full reference extraction
+    contract kg_*/link_*, every dedup / similarity / curation family head,
+    and the s2_binary_ingest bugfix witness) followed by the rotation
+    remainder (54 rows, every one still oracle-backed).  docs/COVERAGE.md
+    maps each remainder row to its judge-verifiable one-liner:
     ``python tools/compare_oracle.py /root/testdata/sf0.01 <name>``."""
+    from kgx import oracles as o
+
+    funnel_gate = dict(min_tokens=20, max_symbol_ratio=0.2)
     return {
-        # ---- driver gate set (first 50 — order matters, see docstring) ----
-        "kg_spans": q_kg_spans,
-        "kg_doc_text": q_kg_doc_text,
-        "kg_mentions": q_kg_mentions,
-        "kg_nodes": q_kg_nodes,
-        "kg_triples": q_kg_triples,
-        "link_canonical_map": q_link_canonical_map,
-        "link_canonical_triples": q_link_canonical_triples,
-        "link_minhash_pairs": q_link_minhash_pairs,
-        "dedup_exact": q_dedup_exact,
-        "dedup_jaccard_pairs": q_dedup_jaccard_pairs,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_simhash_pairs": q_dedup_simhash_pairs,
-        "ann_topk": q_ann_topk,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "emb_near_dup_pairs": q_emb_near_dup_pairs,
-        "text_stats": q_text_stats,
-        "quality_filter": q_quality_filter,
-        "token_counts": q_token_counts,
-        "vocab_topk": q_vocab_topk,
-        "pii_scrub": q_pii_scrub,
-        "sentence_dedup": q_sentence_dedup,
-        "sentence_prune": q_sentence_prune,
-        "curation_funnel": q_curation_funnel,
-        "funnel_export": q_funnel_export,
-        "graph_degrees": q_graph_degrees,
-        "graph_pagerank": q_graph_pagerank,
-        "graph_triangles": q_graph_triangles,
-        "balanced_sample": q_balanced_sample,
-        "contamination": q_contamination,
-        "fingerprints_winnowed": q_fingerprints_winnowed,
-        "language_id": q_language_id,
+        # ---- gate set (first 50 — order matters, see docstring) ----
+        "kg_spans": (q_kg_spans, o.spans_sql, {}),
+        "kg_doc_text": (q_kg_doc_text, o.doc_text_sql, {}),
+        "kg_mentions": (q_kg_mentions, o.mentions_sql, {}),
+        "kg_nodes": (q_kg_nodes, o.nodes_sql, {}),
+        "kg_triples": (q_kg_triples, o.triples_sql, {}),
+        "link_canonical_map": (q_link_canonical_map, o.canonical_map_sql, {}),
+        "link_canonical_triples": (q_link_canonical_triples, o.canonical_triples_sql, {}),
+        "link_minhash_pairs": (q_link_minhash_pairs, o.link_minhash_sql, dict(min_jaccard=0.7)),
+        "dedup_exact": (q_dedup_exact, o.dedup_exact_sql, {}),
+        "dedup_jaccard_pairs": (
+            q_dedup_jaccard_pairs, o.dedup_jaccard_sql,
+            dict(threshold=0.5, max_shingle_df=50),
+        ),
+        "dedup_minhash_lsh": (q_dedup_minhash_lsh, o.dedup_minhash_sql, dict(threshold=0.5)),
+        "dedup_clusters": (q_dedup_clusters, o.dedup_clusters_sql, dict(threshold=0.5)),
+        "dedup_simhash_pairs": (q_dedup_simhash_pairs, o.dedup_simhash_sql, dict(max_bucket=200)),
+        "ann_topk": (q_ann_topk, o.ann_topk_sql, {}),
+        "ann_ivf_topk": (q_ann_ivf_topk, o.ann_ivf_sql, dict(target_cell_size=32)),
+        "emb_near_dup_pairs": (q_emb_near_dup_pairs, o.emb_near_dup_sql, dict(target_cell_size=32)),
+        "text_stats": (q_text_stats, o.text_stats_sql, {}),
+        "quality_filter": (q_quality_filter, o.quality_filter_sql, dict(min_tokens=20)),
+        "token_counts": (q_token_counts, o.token_counts_sql, {}),
+        "vocab_topk": (q_vocab_topk, o.vocab_topk_sql, dict(k=200)),
+        "pii_scrub": (q_pii_scrub, o.pii_scrub_sql, {}),
+        "sentence_dedup": (q_sentence_dedup, o.sentence_dedup_sql, {}),
+        "sentence_prune": (q_sentence_prune, o.sentence_prune_sql, {}),
+        "curation_funnel": (q_curation_funnel, o.curation_funnel_sql, funnel_gate),
+        "funnel_export": (
+            q_funnel_export, o.funnel_export_sql,
+            dict(n_shards=8, capacity=128, **funnel_gate),
+        ),
+        "graph_degrees": (q_graph_degrees, o.graph_degrees_sql, {}),
+        "graph_pagerank": (q_graph_pagerank, o.graph_pagerank_sql, {}),
+        "graph_triangles": (q_graph_triangles, o.graph_triangles_sql, {}),
+        "balanced_sample": (q_balanced_sample, o.balanced_sample_sql, {}),
+        "contamination": (q_contamination, o.contamination_sql, dict(bench_mod=19, n=3)),
+        "fingerprints_winnowed": (q_fingerprints_winnowed, o.winnowed_fingerprints_sql, {}),
+        "language_id": (q_language_id, o.language_id_sql, {}),
         # live-media witness in the driver gate (r4): video_decode_real
         # exercises synthesize → Arrow binary → stdlib RIFF/AVI parse; the
         # plain rolling-hash `fingerprints` rotated out in its place (its
         # stronger winnowed sibling stays in-gate above)
-        "video_decode_real": q_video_decode_real,
-        "media_inventory": q_media_inventory,
-        "asof_last_click": q_asof_last_click,
-        "range_clicks_before_purchase": q_range_clicks_before_purchase,
-        "sessions": q_sessions,
-        "w2_latest_event_per_user": q_latest_event_per_user,
-        "w3_retention_tail": q_retention_tail,
+        "video_decode_real": (q_video_decode_real, o.video_decode_real_sql, {}),
+        "media_inventory": (q_media_inventory, o.media_inventory_sql, {}),
+        "asof_last_click": (q_asof_last_click, o.asof_last_click_sql, {}),
+        "range_clicks_before_purchase": (q_range_clicks_before_purchase, o.range_clicks_sql, {}),
+        "sessions": (q_sessions, o.sessions_sql, dict(gap_sec=21600)),
+        "w2_latest_event_per_user": (q_latest_event_per_user, o.latest_event_sql, {}),
+        "w3_retention_tail": (q_retention_tail, o.retention_tail_sql, dict(keep=3)),
         # r5: ann_ivfpq_topk promoted IN-gate (the composed IVF-PQ ANN
         # flagship); a2_user_type_stats rotated out — the A1/A2
         # counts-and-averages family stays in-gate via a1_pricing_summary
-        "ann_ivfpq_topk": q_ann_ivfpq_topk,
-        "jn6_customers_no_orders": q_customers_no_orders,
+        "ann_ivfpq_topk": (
+            q_ann_ivfpq_topk, o.ann_ivfpq_sql,
+            dict(n_queries=8, k=5, n_centroids=16, nprobe=4, m=8, k_codes=16,
+                 rounds=2),
+        ),
+        "jn6_customers_no_orders": (q_customers_no_orders, o.customers_no_orders_sql, {}),
         # r4: s2_binary_ingest promoted into the gate set (driver-green
         # witness for the /Length PDF-codec fix); jn6_customers_with_orders
         # rotated out — its anti-join sibling stays, and LEFT SEMI is pinned
         # by pytest + the oracle one-liner (docs/COVERAGE.md).
-        "s2_binary_ingest": q_s2_binary_ingest,
+        "s2_binary_ingest": (q_s2_binary_ingest, o.binary_ingest_sql, dict(max_doc_id=400)),
         # r4 session-4: graph_kcore + bloom_contamination promoted into the
         # gate (witnesses for the two new operator families: bounded-round
         # iterative peel with per-round lineage cuts, and the mergeable
@@ -1549,192 +1586,144 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # and a9_rollup_order_stats (grouping-sets family; its quantile
         # sibling a8 stays in-gate).  Both remain oracle-backed one-liners
         # (docs/COVERAGE.md).
-        "graph_kcore": q_graph_kcore,
-        "a1_pricing_summary": q_pricing_summary,
-        "a8_event_value_quantiles": q_a8_event_value_quantiles,
-        "bloom_contamination": q_bloom_contamination,
-        "jn2_graph_fetch": q_jn2_graph_fetch,
-        "a7_bucket_metrics": q_a7_bucket_metrics,
-        "fn_scalar_suite": q_fn_scalar_suite,
-        "p6_p8_text_gate": q_p6_p8_text_gate,
+        "graph_kcore": (q_graph_kcore, o.graph_kcore_sql, dict(k=2, iters=4)),
+        "a1_pricing_summary": (q_pricing_summary, o.pricing_summary_sql, {}),
+        "a8_event_value_quantiles": (q_a8_event_value_quantiles, o.event_value_quantiles_sql, {}),
+        "bloom_contamination": (
+            q_bloom_contamination, o.bloom_contamination_sql,
+            dict(bench_mod=19, n=3, m_bits=65536, k=4),
+        ),
+        "jn2_graph_fetch": (q_jn2_graph_fetch, o.graph_fetch_sql, {}),
+        "a7_bucket_metrics": (q_a7_bucket_metrics, o.bucket_metrics_sql, {}),
+        "fn_scalar_suite": (q_fn_scalar_suite, o.scalar_suite_sql, {}),
+        "p6_p8_text_gate": (q_p6_p8_text_gate, o.text_gate_sql, {}),
         # ---- rotation remainder (54 — outside the driver's 50-row cap;
         # each is oracle-backed and judge-verifiable via
         # `python tools/compare_oracle.py /root/testdata/sf0.01 <name>`;
         # full mapping + rationale in docs/COVERAGE.md) ----
-        "j1_props_parse": q_j1_props_parse,
-        "j2_json_repair": q_j2_json_repair,
-        "j3_graph_coercion": q_j3_graph_coercion,
-        "p9_graph_checks": q_p9_graph_checks,
-        "p10_media_security": q_p10_media_security,
-        "s5_csv_prose": q_s5_csv_prose,
-        "jn6_customers_with_orders": q_customers_with_orders,
-        "s7_llm_fake_edges": q_s7_llm_fake_edges,
-        "media_decode_fake": q_media_decode_fake,
-        "media_decode_real": q_media_decode_real,
-        "audio_decode_real": q_audio_decode_real,
-        "video_frames_real": q_video_frames_real,
-        "media_resize_real": q_media_resize_real,
-        "fingerprints": q_fingerprints,
-        "graph_label_prop": q_graph_label_prop,
-        "graph_entity_pmi": q_graph_entity_pmi,
-        "a3_latest_order_per_customer": q_latest_order_per_customer,
-        "a9_rollup_order_stats": q_a9_rollup_order_stats,
-        "kg_version_diff": q_kg_version_diff,
-        "graph_link_candidates": q_graph_link_candidates,
-        "kg_training_pairs": q_kg_training_pairs,
-        "kg_negative_samples": q_kg_negative_samples,
-        "media_frames": q_media_frames,
-        "media_resize": q_media_resize,
-        "emb_kmeans": q_emb_kmeans,
-        "semdedup": q_semdedup,
-        "inverted_postings": q_inverted_postings,
-        "media_captions": q_media_captions,
-        "seq_pack_interleaved": q_seq_pack_interleaved,
-        "hll_registers": q_hll_registers,
-        "cm_registers": q_cm_registers,
-        "bloom_registers": q_bloom_registers,
-        "hist_registers": q_hist_registers,
-        "cm_heavy_hitters": q_cm_heavy_hitters,
-        "hll_by_group": q_hll_by_group,
-        "lm_trigram_counts": q_lm_trigram_counts,
-        "seq_pack": q_seq_pack,
-        "shard_manifest": q_shard_manifest,
-        "token_mix": q_token_mix,
-        "repetition_stats": q_repetition_stats,
-        "bm25_topk": q_bm25_topk,
-        "unigram_surprisal": q_unigram_surprisal,
-        "graph_random_walks": q_graph_random_walks,
-        "walk_skipgram_pairs": q_walk_skipgram_pairs,
-        "kg_transe_margin": q_kg_transe_margin,
-        "pq_codes": q_pq_codes,
-        "pq_topk": q_pq_topk,
-        "ann_recall": q_ann_recall,
-        "graph_two_hop": q_graph_two_hop,
+        "j1_props_parse": (q_j1_props_parse, o.props_parse_sql, {}),
+        "j2_json_repair": (q_j2_json_repair, o.json_repair_sql, {}),
+        "j3_graph_coercion": (q_j3_graph_coercion, o.graph_coercion_sql, {}),
+        "p9_graph_checks": (q_p9_graph_checks, o.graph_checks_sql, {}),
+        "p10_media_security": (q_p10_media_security, o.media_security_sql, {}),
+        "s5_csv_prose": (q_s5_csv_prose, o.csv_prose_sql, dict(rows_per_doc=50)),
+        "jn6_customers_with_orders": (q_customers_with_orders, o.customers_with_orders_sql, {}),
+        "s7_llm_fake_edges": (q_s7_llm_fake_edges, o.llm_edges_sql, {}),
+        "media_decode_fake": (q_media_decode_fake, o.media_decode_sql, {}),
+        "media_decode_real": (q_media_decode_real, o.media_decode_real_sql, {}),
+        "audio_decode_real": (q_audio_decode_real, o.audio_decode_real_sql, {}),
+        "video_frames_real": (q_video_frames_real, o.video_frames_real_sql, {}),
+        "media_resize_real": (q_media_resize_real, o.media_resize_real_sql, dict(max_w=8, max_h=8)),
+        "fingerprints": (q_fingerprints, o.fingerprints_sql, {}),
+        "graph_label_prop": (q_graph_label_prop, o.graph_label_prop_sql, dict(iters=3)),
+        "graph_entity_pmi": (q_graph_entity_pmi, o.entity_pmi_sql, dict(min_co=2)),
+        "a3_latest_order_per_customer": (q_latest_order_per_customer, o.latest_order_sql, {}),
+        "a9_rollup_order_stats": (q_a9_rollup_order_stats, o.rollup_order_stats_sql, {}),
+        "kg_version_diff": (q_kg_version_diff, o.kg_version_diff_sql, {}),
+        "graph_link_candidates": (
+            q_graph_link_candidates, o.graph_link_candidates_sql,
+            dict(max_degree=64, min_common=2),
+        ),
+        "kg_training_pairs": (q_kg_training_pairs, o.kg_training_pairs_sql, dict(k=2, buckets=64)),
+        "kg_negative_samples": (
+            q_kg_negative_samples, o.kg_negative_samples_sql, dict(k=2, buckets=64)
+        ),
+        "media_frames": (q_media_frames, o.media_frames_sql, dict(fps=4)),
+        "media_resize": (q_media_resize, o.media_resize_sql, dict(max_w=64, max_h=64)),
+        "emb_kmeans": (q_emb_kmeans, o.emb_kmeans_sql, dict(rounds=2, target_cluster_size=64)),
+        "semdedup": (
+            q_semdedup, o.semdedup_sql,
+            dict(rounds=2, min_cosine=0.4, target_cluster_size=64),
+        ),
+        "inverted_postings": (
+            q_inverted_postings, o.inverted_postings_sql, dict(min_df=2, max_df=400)
+        ),
+        "media_captions": (q_media_captions, o.media_caption_pairs_sql, {}),
+        "seq_pack_interleaved": (
+            q_seq_pack_interleaved, o.seq_pack_interleaved_sql,
+            dict(capacity=4096, n_shards=8, media_token_cost=576),
+        ),
+        "hll_registers": (q_hll_registers, o.hll_registers_sql, dict(m=64)),
+        "cm_registers": (
+            q_cm_registers,
+            partial(o.cm_registers_sql, "cast(user_id as varchar)"),
+            dict(depth=4, width=256),
+        ),
+        "bloom_registers": (
+            q_bloom_registers, o.bloom_registers_sql,
+            dict(bench_mod=19, n=3, m_bits=65536, k=4),
+        ),
+        "hist_registers": (q_hist_registers, o.hist_registers_sql, {}),
+        "cm_heavy_hitters": (
+            q_cm_heavy_hitters, o.cm_heavy_hitters_sql,
+            dict(threshold=75, depth=4, width=256),
+        ),
+        "hll_by_group": (q_hll_by_group, o.hll_grouped_sql, dict(m=64)),
+        "lm_trigram_counts": (q_lm_trigram_counts, o.lm_ngram_counts_sql, dict(n=3, min_count=2)),
+        "seq_pack": (q_seq_pack, o.seq_pack_sql, dict(capacity=128, n_shards=8)),
+        "shard_manifest": (q_shard_manifest, o.shard_manifest_sql, dict(n_shards=8)),
+        "token_mix": (q_token_mix, o.token_mix_sql, {}),
+        "repetition_stats": (q_repetition_stats, o.repetition_sql, {}),
+        # 'dup' is the one rare token in the gate corpus vocabulary (df/N ≈ 0.05
+        # → idf_bits 5), the others are common (idf_bits 1), so the ranking
+        # exercises both idf extremes plus tf/length normalization
+        "bm25_topk": (
+            q_bm25_topk, o.bm25_topk_sql,
+            dict(query_terms=["dup", "window", "join", "hash"], k=25),
+        ),
+        "unigram_surprisal": (q_unigram_surprisal, o.unigram_surprisal_sql, {}),
+        "graph_random_walks": (
+            q_graph_random_walks, o.graph_random_walks_sql,
+            dict(length=4, walks_per_node=2),
+        ),
+        "walk_skipgram_pairs": (
+            q_walk_skipgram_pairs, o.walk_skipgram_pairs_sql,
+            dict(length=4, walks_per_node=2, window=2),
+        ),
+        "kg_transe_margin": (
+            q_kg_transe_margin, o.kg_transe_margin_sql,
+            dict(k=2, buckets=64, dim=8, modulus=1024),
+        ),
+        "pq_codes": (q_pq_codes, o.pq_codes_sql, dict(m=8, k=16, rounds=2)),
+        "pq_topk": (q_pq_topk, o.pq_topk_sql, dict(n_queries=8, k=5, m=8, k_codes=16, rounds=2)),
+        "ann_recall": (
+            q_ann_recall, o.ann_recall_sql,
+            dict(n_queries=8, k=5, n_centroids=16, nprobe=4),
+        ),
+        "graph_two_hop": (q_graph_two_hop, o.graph_two_hop_sql, dict(max_degree=64)),
         # rotated out r5 when ann_ivfpq_topk was promoted in-gate
-        "a2_user_type_stats": q_user_type_stats,
-        "graph_node2vec_walks": q_graph_node2vec_walks,
-        "lsh_recall": q_lsh_recall,
-        "dataset_split": q_dataset_split,
-        "kg_scd2_intervals": q_kg_scd2_intervals,
+        "a2_user_type_stats": (q_user_type_stats, o.user_type_stats_sql, {}),
+        "graph_node2vec_walks": (
+            q_graph_node2vec_walks, o.node2vec_walks_sql,
+            dict(length=4, walks_per_node=2, seed=0, w_return=1, w_near=4,
+                 w_far=2),
+        ),
+        "lsh_recall": (
+            q_lsh_recall, o.lsh_recall_sql,
+            dict(threshold=0.5, max_shingle_df=50, num_hashes=16, bands=8,
+                 max_bucket=200),
+        ),
+        "dataset_split": (
+            q_dataset_split, o.dataset_split_sql,
+            dict(val_bp=500, test_bp=500, strat_col="source"),
+        ),
+        "kg_scd2_intervals": (q_kg_scd2_intervals, o.kg_scd2_sql, {}),
+    }
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """All 104 oracle-backed queries, in gate order: each registry row's
+    engine builder with its gate params bound, called as
+    ``fn(spark, sf_dir)``."""
+    return {
+        name: partial(build, **params)
+        for name, (build, _, params) in _registry().items()
     }
 
 
 def oracle_sql() -> dict[str, str]:
-    from kgx import oracles
-
+    """Each registry row's DuckDB SQL, rendered with the same gate params."""
     return {
-        "kg_spans": oracles.spans_sql(),
-        "kg_doc_text": oracles.doc_text_sql(),
-        "kg_mentions": oracles.mentions_sql(),
-        "kg_nodes": oracles.nodes_sql(),
-        "kg_triples": oracles.triples_sql(),
-        "link_canonical_map": oracles.canonical_map_sql(),
-        "link_canonical_triples": oracles.canonical_triples_sql(),
-        "link_minhash_pairs": oracles.link_minhash_sql(),
-        "dedup_exact": oracles.dedup_exact_sql(),
-        "dedup_jaccard_pairs": oracles.dedup_jaccard_sql(),
-        "dedup_minhash_lsh": oracles.dedup_minhash_sql(),
-        "dedup_clusters": oracles.dedup_clusters_sql(),
-        "dedup_simhash_pairs": oracles.dedup_simhash_sql(),
-        "ann_topk": oracles.ann_topk_sql(),
-        "ann_ivf_topk": oracles.ann_ivf_sql(target_cell_size=32),
-        "emb_near_dup_pairs": oracles.emb_near_dup_sql(target_cell_size=32),
-        "text_stats": oracles.text_stats_sql(),
-        "quality_filter": oracles.quality_filter_sql(min_tokens=20),
-        "token_counts": oracles.token_counts_sql(),
-        "vocab_topk": oracles.vocab_topk_sql(k=200),
-        "pii_scrub": oracles.pii_scrub_sql(),
-        "sentence_dedup": oracles.sentence_dedup_sql(),
-        "sentence_prune": oracles.sentence_prune_sql(),
-        "curation_funnel": oracles.curation_funnel_sql(),
-        "funnel_export": oracles.funnel_export_sql(n_shards=8, capacity=128),
-        "graph_degrees": oracles.graph_degrees_sql(),
-        "graph_pagerank": oracles.graph_pagerank_sql(),
-        "graph_triangles": oracles.graph_triangles_sql(),
-        "graph_label_prop": oracles.graph_label_prop_sql(),
-        "graph_kcore": oracles.graph_kcore_sql(),
-        "kg_version_diff": oracles.kg_version_diff_sql(),
-        "graph_link_candidates": oracles.graph_link_candidates_sql(),
-        "kg_training_pairs": oracles.kg_training_pairs_sql(),
-        "kg_transe_margin": oracles.kg_transe_margin_sql(),
-        "pq_codes": oracles.pq_codes_sql(),
-        "pq_topk": oracles.pq_topk_sql(),
-        "ann_ivfpq_topk": oracles.ann_ivfpq_sql(),
-        "ann_recall": oracles.ann_recall_sql(),
-        "graph_two_hop": oracles.graph_two_hop_sql(),
-        "graph_node2vec_walks": oracles.node2vec_walks_sql(),
-        "lsh_recall": oracles.lsh_recall_sql(),
-        "dataset_split": oracles.dataset_split_sql(),
-        "kg_scd2_intervals": oracles.kg_scd2_sql(),
-        "kg_negative_samples": oracles.kg_negative_samples_sql(),
-        "graph_entity_pmi": oracles.entity_pmi_sql(),
-        "balanced_sample": oracles.balanced_sample_sql(),
-        "contamination": oracles.contamination_sql(bench_mod=19, n=3),
-        "fingerprints_winnowed": oracles.winnowed_fingerprints_sql(),
-        "language_id": oracles.language_id_sql(),
-        "fingerprints": oracles.fingerprints_sql(),
-        "media_inventory": oracles.media_inventory_sql(),
-        "asof_last_click": oracles.asof_last_click_sql(),
-        "range_clicks_before_purchase": oracles.range_clicks_sql(),
-        "sessions": oracles.sessions_sql(gap_sec=21600),
-        "w2_latest_event_per_user": oracles.latest_event_sql(),
-        "w3_retention_tail": oracles.retention_tail_sql(),
-        "a2_user_type_stats": oracles.user_type_stats_sql(),
-        "jn6_customers_no_orders": oracles.customers_no_orders_sql(),
-        "jn6_customers_with_orders": oracles.customers_with_orders_sql(),
-        "a3_latest_order_per_customer": oracles.latest_order_sql(),
-        "a1_pricing_summary": oracles.pricing_summary_sql(),
-        "a8_event_value_quantiles": oracles.event_value_quantiles_sql(),
-        "a9_rollup_order_stats": oracles.rollup_order_stats_sql(),
-        "jn2_graph_fetch": oracles.graph_fetch_sql(),
-        "a7_bucket_metrics": oracles.bucket_metrics_sql(),
-        "fn_scalar_suite": oracles.scalar_suite_sql(),
-        "p6_p8_text_gate": oracles.text_gate_sql(),
-        "j1_props_parse": oracles.props_parse_sql(),
-        "j2_json_repair": oracles.json_repair_sql(),
-        "j3_graph_coercion": oracles.graph_coercion_sql(),
-        "p9_graph_checks": oracles.graph_checks_sql(),
-        "p10_media_security": oracles.media_security_sql(),
-        "s5_csv_prose": oracles.csv_prose_sql(),
-        "s2_binary_ingest": oracles.binary_ingest_sql(),
-        "s7_llm_fake_edges": oracles.llm_edges_sql(),
-        "media_decode_fake": oracles.media_decode_sql(),
-        "media_decode_real": oracles.media_decode_real_sql(),
-        "audio_decode_real": oracles.audio_decode_real_sql(),
-        "video_decode_real": oracles.video_decode_real_sql(),
-        "video_frames_real": oracles.video_frames_real_sql(),
-        "media_resize_real": oracles.media_resize_real_sql(),
-        "media_frames": oracles.media_frames_sql(),
-        "media_resize": oracles.media_resize_sql(),
-        "emb_kmeans": oracles.emb_kmeans_sql(rounds=2, target_cluster_size=64),
-        "semdedup": oracles.semdedup_sql(
-            rounds=2, min_cosine=0.4, target_cluster_size=64
-        ),
-        "inverted_postings": oracles.inverted_postings_sql(min_df=2, max_df=400),
-        "media_captions": oracles.media_caption_pairs_sql(),
-        "seq_pack_interleaved": oracles.seq_pack_interleaved_sql(
-            capacity=4096, n_shards=8, media_token_cost=576
-        ),
-        "hll_registers": oracles.hll_registers_sql(m=64),
-        "bloom_registers": oracles.bloom_registers_sql(bench_mod=19, n=3),
-        "bloom_contamination": oracles.bloom_contamination_sql(bench_mod=19, n=3),
-        "hist_registers": oracles.hist_registers_sql(),
-        "cm_heavy_hitters": oracles.cm_heavy_hitters_sql(threshold=75),
-        "hll_by_group": oracles.hll_grouped_sql(),
-        "cm_registers": oracles.cm_registers_sql(
-            "cast(user_id as varchar)", depth=4, width=256
-        ),
-        "lm_trigram_counts": oracles.lm_ngram_counts_sql(n=3, min_count=2),
-        "seq_pack": oracles.seq_pack_sql(capacity=128, n_shards=8),
-        "shard_manifest": oracles.shard_manifest_sql(n_shards=8),
-        "token_mix": oracles.token_mix_sql(),
-        "repetition_stats": oracles.repetition_sql(),
-        "bm25_topk": oracles.bm25_topk_sql(**BM25_GATE),
-        "unigram_surprisal": oracles.unigram_surprisal_sql(),
-        "graph_random_walks": oracles.graph_random_walks_sql(
-            length=4, walks_per_node=2
-        ),
-        "walk_skipgram_pairs": oracles.walk_skipgram_pairs_sql(
-            length=4, walks_per_node=2, window=2
-        ),
+        name: oracle(**params)
+        for name, (_, oracle, params) in _registry().items()
     }

@@ -65,7 +65,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     # headline subset — one representative per operator family; the full
-    # 26-query suite is exercised by the correctness gate, not re-timed here
+    # registry is exercised by the correctness gate, not re-timed here
     headline = [
         "kg_triples",
         "link_canonical_triples",

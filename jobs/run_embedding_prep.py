@@ -5,6 +5,7 @@ materialized (never re-extracting — the run_graph_stats stance) and
 writes the three training-data tables a node2vec / TransE trainer
 consumes::
 
+    python tools/package.py                       # builds dist/kgx.zip
     spark-submit --py-files dist/kgx.zip jobs/run_embedding_prep.py \\
         --graph /data/kg_out --out /data/kg_training \\
         --walk-length 8 --walks-per-node 4 --window 2 --seed 0

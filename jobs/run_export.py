@@ -13,6 +13,7 @@ shards it deterministically, and writes::
 
 Usage::
 
+    python tools/package.py                       # builds dist/kgx.zip
     spark-submit --py-files dist/kgx.zip jobs/run_export.py \\
         --input /data/curated/curated --out /data/export \\
         --n-shards 1024 --capacity 2048

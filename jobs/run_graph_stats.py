@@ -3,6 +3,7 @@
 Consumes the triples table a finished jobs/run_pipeline.py run materialized
 (never re-extracting) and writes three analytics tables::
 
+    python tools/package.py                       # builds dist/kgx.zip
     spark-submit --py-files dist/kgx.zip jobs/run_graph_stats.py \\
         --graph /data/kg_out --out /data/kg_analytics \\
         --pagerank-iters 5 --checkpoint-every 0

@@ -373,11 +373,8 @@ def dataset_split(
     if val_bp < 0 or test_bp < 0 or val_bp + test_bp > 10000:
         raise ValueError(f"bad split shares val_bp={val_bp} test_bp={test_bp}")
     h = seeded("cast(doc_id as string)", seed, "spark")
-    # NULL strata must stay IN the audit (web-crawl metadata is often
-    # missing): coalesce to a sentinel before grouping, or the inner
-    # equi-join below would silently drop every NULL-stratum document
     assigned = documents.select(
-        F.expr(f"coalesce({strat_col}, '(null)')").alias("stratum"),
+        F.expr(strat_col).alias("stratum"),
         F.expr(
             f"CASE WHEN ({h}) % 10000 < {test_bp} THEN 'test' "
             f"WHEN ({h}) % 10000 < {test_bp + val_bp} THEN 'val' "
@@ -390,8 +387,13 @@ def dataset_split(
     totals = counts.groupBy("stratum").agg(
         F.sum("n_docs").cast("long").alias("n_total")
     )
-    return counts.join(totals, "stratum").select(
-        "stratum",
+    # NULL strata must stay IN the audit, as their own group (web-crawl
+    # metadata is often missing): a plain equi-join would silently drop
+    # every NULL-stratum document, and a sentinel would merge them with a
+    # real stratum that happens to spell it
+    c, t = counts.alias("c"), totals.alias("t")
+    return c.join(t, F.col("c.stratum").eqNullSafe(F.col("t.stratum"))).select(
+        "c.stratum",
         "split",
         "n_docs",
         F.expr("(10000 * n_docs) div n_total").cast("long").alias("share_bp"),

@@ -3507,13 +3507,14 @@ def dataset_split_sql(
     """Oracle for the deterministic split audit (mirror of
     kgx.operators.curation.dataset_split): same seeded md5-60 threshold
     assignment (kgx.functions.hashing.seeded, duckdb dialect), same
-    NULL-stratum sentinel, same per-stratum floor-divided shares."""
+    NULL stratum kept as its own group (joined IS NOT DISTINCT FROM),
+    same per-stratum floor-divided shares."""
     from kgx.functions.hashing import seeded
 
     h = seeded("CAST(doc_id AS VARCHAR)", seed, "duckdb")
     return f"""
 WITH ds_assigned AS (
-    SELECT coalesce({strat_col}, '(null)') AS stratum,
+    SELECT {strat_col} AS stratum,
            CASE WHEN ({h}) % 10000 < {test_bp} THEN 'test'
                 WHEN ({h}) % 10000 < {test_bp + val_bp} THEN 'val'
                 ELSE 'train' END AS split
@@ -3529,34 +3530,25 @@ ds_totals AS (
 )
 SELECT c.stratum, c.split, c.n_docs,
        CAST((10000 * c.n_docs) // t.n_total AS BIGINT) AS share_bp
-FROM ds_counts c JOIN ds_totals t USING (stratum)
+FROM ds_counts c JOIN ds_totals t ON c.stratum IS NOT DISTINCT FROM t.stratum
 """.strip()
 
 
-def kg_scd2_sql(n_runs: int = 3) -> str:
+def kg_scd2_sql() -> str:
     """Oracle for SCD2 validity intervals over simulated run appends
     (mirror of kgx.plans.versions.scd2_intervals composed with the
     q_kg_scd2_intervals run synthesis): the same three post-extraction
-    slices stamped run_seq 1..3, islands via run_seq - row_number().
-    The run synthesis is defined for EXACTLY three runs (the engine side
-    hardcodes three unionByName slices) — a larger n_runs would silently
-    alias extra runs to the full slice with no engine counterpart."""
-    if n_runs != 3:
-        raise ValueError(
-            f"kg_scd2_sql run synthesis is defined for exactly 3 runs, "
-            f"got n_runs={n_runs}"
-        )
-    runs = []
-    for r in range(1, n_runs + 1):
-        pred_f = "AND pred <> 'acquired'" if r == 1 else ""
-        mod = {1: "CAST(substr(t.doc_id, 5) AS BIGINT) % 3 <> 0",
-               2: "CAST(substr(t.doc_id, 5) AS BIGINT) % 5 <> 4",
-               3: "TRUE"}[r if r <= 3 else 3]
-        runs.append(
-            f"SELECT subj, pred, obj, CAST({r} AS BIGINT) AS run_seq "
-            f"FROM tri t WHERE {mod} {pred_f}"
-        )
-    union = "\nUNION ALL\n".join(runs)
+    slices stamped run_seq 1..3, islands via run_seq - row_number(), and
+    the newest run derived from the data as max(run_seq)."""
+    dnum = "CAST(substr(t.doc_id, 5) AS BIGINT)"
+    slices = (
+        f"{dnum} % 3 <> 0 AND pred <> 'acquired'", f"{dnum} % 5 <> 4", "TRUE"
+    )
+    union = "\nUNION ALL\n".join(
+        f"SELECT subj, pred, obj, CAST({r} AS BIGINT) AS run_seq "
+        f"FROM tri t WHERE {cond}"
+        for r, cond in enumerate(slices, start=1)
+    )
     return f"""
 WITH {_tri_cte_head()},
 sc_runs AS ({union}),
@@ -3570,6 +3562,6 @@ sc_isl AS (
 SELECT subj, pred, obj,
        CAST(min(run_seq) AS BIGINT) AS first_seq,
        CAST(max(run_seq) AS BIGINT) AS last_seq,
-       (max(run_seq) = {n_runs}) AS is_current
+       (max(run_seq) = (SELECT max(run_seq) FROM sc_pres)) AS is_current
 FROM sc_isl GROUP BY subj, pred, obj, island
 """.strip()

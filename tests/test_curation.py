@@ -273,7 +273,7 @@ def test_dataset_split_rejects_bad_shares(spark):
 
 
 def test_dataset_split_keeps_null_strata(spark):
-    """NULL-source documents must appear in the audit under a sentinel,
+    """NULL-source documents must appear in the audit as a NULL stratum,
     never silently dropped by the totals equi-join."""
     df = spark.createDataFrame(
         pd.DataFrame({"doc_id": [f"d{i}" for i in range(40)],
@@ -283,5 +283,31 @@ def test_dataset_split_keeps_null_strata(spark):
     by_stratum = {}
     for r in rows:
         by_stratum[r.stratum] = by_stratum.get(r.stratum, 0) + r.n_docs
-    assert by_stratum.get("(null)", 0) == 20  # all NULL-source docs audited
-    assert sum(by_stratum.values()) == 40     # nothing dropped
+    assert by_stratum.get(None, 0) == 20  # all NULL-source docs audited
+    assert sum(by_stratum.values()) == 40  # nothing dropped
+
+
+def test_dataset_split_null_and_literal_null_strata_stay_apart(spark):
+    """A NULL stratum and a real stratum spelled '(null)' are two groups,
+    each with shares over its own total, in the engine and the DuckDB
+    oracle alike."""
+    import duckdb
+
+    from kgx.oracles import dataset_split_sql
+
+    pdf = pd.DataFrame({
+        "doc_id": [f"d{i}" for i in range(60)],
+        "source": [[None, "(null)", "web"][i % 3] for i in range(60)],
+    })
+    got = {(r.stratum, r.split): (r.n_docs, r.share_bp)
+           for r in curation.dataset_split(spark.createDataFrame(pdf)).collect()}
+    assert got == _py_split(list(pdf.doc_id), list(pdf.source))
+    assert {s for s, _ in got} == {None, "(null)", "web"}
+    for s in (None, "(null)"):
+        assert sum(n for (st, _), (n, _) in got.items() if st == s) == 20
+
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    oracle = {(r[0], r[1]): (r[2], r[3])
+              for r in con.sql(dataset_split_sql()).fetchall()}
+    assert oracle == got

@@ -4,14 +4,85 @@ property for the relation-pattern pre-filters.
 
 The full Spark-vs-DuckDB value-hash comparison for these queries runs in
 tools/compare_oracle.py (driver gate); here we assert the structural
-invariants that the hash comparison cannot localize when it fails.
+invariants that the hash comparison cannot localize when it fails, and
+guard the query registry itself (order, size, and each gate parameter
+stated once, in its row) without starting Spark.
 """
 
+import ast
+import inspect
 import re
 
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entry
 from kgx.operators import rules
+
+#: the correctness gate records the first 50 registry rows only
+GATE_50 = (
+    "kg_spans", "kg_doc_text", "kg_mentions", "kg_nodes", "kg_triples",
+    "link_canonical_map", "link_canonical_triples", "link_minhash_pairs",
+    "dedup_exact", "dedup_jaccard_pairs", "dedup_minhash_lsh",
+    "dedup_clusters", "dedup_simhash_pairs", "ann_topk", "ann_ivf_topk",
+    "emb_near_dup_pairs", "text_stats", "quality_filter", "token_counts",
+    "vocab_topk", "pii_scrub", "sentence_dedup", "sentence_prune",
+    "curation_funnel", "funnel_export", "graph_degrees", "graph_pagerank",
+    "graph_triangles", "balanced_sample", "contamination",
+    "fingerprints_winnowed", "language_id", "video_decode_real",
+    "media_inventory", "asof_last_click", "range_clicks_before_purchase",
+    "sessions", "w2_latest_event_per_user", "w3_retention_tail",
+    "ann_ivfpq_topk", "jn6_customers_no_orders", "s2_binary_ingest",
+    "graph_kcore", "a1_pricing_summary", "a8_event_value_quantiles",
+    "bloom_contamination", "jn2_graph_fetch", "a7_bucket_metrics",
+    "fn_scalar_suite", "p6_p8_text_gate",
+)
+
+
+def test_registry_order_and_size():
+    names = list(entry.queries())
+    assert len(names) == 104
+    assert tuple(names[:50]) == GATE_50
+    assert list(entry.oracle_sql()) == names
+
+
+def test_registry_params_bind_to_both_builders():
+    """Every row's gate params are accepted by its engine builder (after
+    spark, sf_dir) and by its oracle builder."""
+    for name, (build, oracle, params) in entry._registry().items():
+        try:
+            inspect.signature(build).bind(None, None, **params)
+            inspect.signature(oracle).bind(**params)
+        except TypeError as e:
+            raise AssertionError(f"{name}: {e}") from e
+
+
+def _literal(node: ast.AST) -> bool:
+    try:
+        ast.literal_eval(node)
+    except ValueError:
+        return False
+    return True
+
+
+def test_engine_builders_restate_no_oracle_param():
+    """A q_* body that passes a literal under the name of one of its
+    oracle builder's parameters states that gate value a second time: it
+    belongs in the registry row's params, which feed both sides."""
+    tree = ast.parse(inspect.getsource(entry))
+    defs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+    restated = {}
+    for name, (build, oracle, _) in entry._registry().items():
+        oracle_params = inspect.signature(oracle).parameters
+        hits = sorted(
+            kw.arg
+            for node in ast.walk(defs[build.__name__])
+            if isinstance(node, ast.Call)
+            for kw in node.keywords
+            if kw.arg in oracle_params and _literal(kw.value)
+        )
+        if hits:
+            restated[name] = hits
+    assert restated == {}
 
 
 def test_relation_guards_never_skip_a_matching_sentence():
@@ -86,9 +157,7 @@ def test_guarded_extraction_matches_unguarded():
 
 
 def test_jn2_graph_fetch_counts_align(spark, sf_dir):
-    import __spark_entry__ as em
-
-    rows = em.queries()["jn2_graph_fetch"](spark, sf_dir).collect()
+    rows = entry.queries()["jn2_graph_fetch"](spark, sf_dir).collect()
     assert len(rows) == 500
     for r in rows:
         assert r.n_nodes == (0 if r.node_list == "" else r.node_list.count("|") + 1)
@@ -102,9 +171,7 @@ def test_jn2_graph_fetch_counts_align(spark, sf_dir):
 
 
 def test_p6_p8_text_gate_variants(spark, sf_dir):
-    import __spark_entry__ as em
-
-    rows = {r.doc_id: r for r in em.queries()["p6_p8_text_gate"](spark, sf_dir).collect()}
+    rows = {r.doc_id: r for r in entry.queries()["p6_p8_text_gate"](spark, sf_dir).collect()}
     for doc_id, r in rows.items():
         if doc_id % 31 in (7, 13):
             assert r.gate == "empty"
@@ -117,9 +184,7 @@ def test_p6_p8_text_gate_variants(spark, sf_dir):
 def test_fn_scalar_suite_shapes(spark, sf_dir):
     import hashlib
 
-    import __spark_entry__ as em
-
-    df = em.queries()["fn_scalar_suite"](spark, sf_dir)
+    df = entry.queries()["fn_scalar_suite"](spark, sf_dir)
     rows = df.limit(5).collect()
     ids = [r.doc_id for r in rows]
     docs = {

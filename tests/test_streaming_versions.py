@@ -4,7 +4,6 @@ import os
 import shutil
 import tempfile
 
-import pytest
 from pyspark.sql import functions as F
 
 from kgx.plans import versions
@@ -358,7 +357,7 @@ def test_scd2_intervals_gaps_and_islands(spark):
         rows, "subj string, pred string, obj string, run_seq long"
     )
     got = {(r.subj, r.first_seq, r.last_seq, r.is_current)
-           for r in versions.scd2_intervals(runs, n_runs=3).collect()}
+           for r in versions.scd2_intervals(runs).collect()}
     assert got == {
         ("a", 1, 1, False), ("a", 3, 3, True),
         ("c", 2, 3, True),
@@ -368,12 +367,45 @@ def test_scd2_intervals_gaps_and_islands(spark):
 
 
 def test_scd2_intervals_rejects_stale_n_runs(spark):
-    """A run_seq beyond n_runs means the caller's n_runs is stale: rather
-    than silently marking nothing at the true newest run current, the
-    query fails and names the offending run."""
+    """The newest run is derived from the data, so no caller-supplied run
+    count can go stale: when the log reaches run 3, exactly the segments
+    ending at run 3 are current."""
     runs = spark.createDataFrame(
         [("a", "r", "b", 1), ("a", "r", "b", 3), ("c", "r", "d", 2)],
         "subj string, pred string, obj string, run_seq long",
     )
-    with pytest.raises(Exception, match="run_seq 3 exceeds n_runs=2"):
-        versions.scd2_intervals(runs, n_runs=2).collect()
+    got = {(r.subj, r.first_seq, r.last_seq, r.is_current)
+           for r in versions.scd2_intervals(runs).collect()}
+    assert got == {("a", 1, 1, False), ("a", 3, 3, True), ("c", 2, 2, False)}
+
+
+def test_scd2_intervals_five_run_law(spark):
+    """Five runs against a pure-Python gaps-and-islands reference: each
+    triple's segments are its maximal runs of consecutive run_seq values,
+    and a segment is current iff it ends at run 5, the newest in the log."""
+    import random
+
+    rng = random.Random(5)
+    presence = {
+        (f"s{i}", "r", f"o{i % 7}"): sorted(
+            seq for seq in range(1, 6) if rng.random() < 0.6
+        )
+        for i in range(60)
+    }
+    presence = {k: v for k, v in presence.items() if v}
+    presence[("z", "r", "z")] = [5]  # the log reaches run 5
+    rows = [(*k, seq) for k, seqs in presence.items() for seq in seqs]
+    runs = spark.createDataFrame(
+        rows, "subj string, pred string, obj string, run_seq long"
+    )
+    want = set()
+    for key, seqs in presence.items():
+        start = seqs[0]
+        for seq, nxt in zip(seqs, seqs[1:] + [None]):
+            if nxt != seq + 1:
+                want.add((*key, start, seq, seq == 5))
+                start = nxt
+    got = {(r.subj, r.pred, r.obj, r.first_seq, r.last_seq, r.is_current)
+           for r in versions.scd2_intervals(runs).collect()}
+    assert got == want
+    assert any(cur for *_, cur in got) and not all(cur for *_, cur in got)

@@ -56,9 +56,6 @@ def main() -> int:
         t0 = time.time()
         spark_pdf = fn(spark, sf_dir).toPandas()
         t_spark = time.time() - t0
-        if name not in os_:
-            print(f"{name:24s} rows={len(spark_pdf):7d}  (no oracle — rows-only)")
-            continue
         t0 = time.time()
         duck_pdf = con.sql(os_[name]).df()
         t_duck = time.time() - t0
